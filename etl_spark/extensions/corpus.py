@@ -677,17 +677,16 @@ def write_training_shards(
     # With (shard, hkey, doc_id) the requirement is satisfied as a
     # prefix, the writer skips its sort, and hkey order survives to
     # the files (tests assert the on-disk order). The overwrite mode
-    # is pinned STATIC for the duration: this is a full re-lay, and
-    # session-leaked dynamic mode would keep stale shards whose
+    # is pinned STATIC on the write: this is a full re-lay, and a
+    # session-level dynamic mode would keep stale shards whose
     # partition received no new rows (shrunken corpus, changed seed).
-    _with_overwrite_mode(docs.sparkSession, "static")(
-        lambda: (
-            h.repartition(N_SHARDS, "shard")
-            .sortWithinPartitions("shard", "hkey", "doc_id")
-            .write.mode("overwrite")
-            .partitionBy("shard")
-            .parquet(path)
-        )
+    (
+        h.repartition(N_SHARDS, "shard")
+        .sortWithinPartitions("shard", "hkey", "doc_id")
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "static")
+        .partitionBy("shard")
+        .parquet(path)
     )
     import json as _json
     import os as _os
@@ -1117,14 +1116,13 @@ def delete_docs_from_shards(
             )
             # dynamic overwrite only touches partitions that RECEIVE
             # rows, which is exactly the rewrite set here
-            _with_overwrite_mode(spark, "dynamic")(
-                lambda: (
-                    kept.repartition(len(rewrite), "shard")
-                    .sortWithinPartitions("shard", "hkey", "doc_id")
-                    .write.mode("overwrite")
-                    .partitionBy("shard")
-                    .parquet(path)
-                )
+            (
+                kept.repartition(len(rewrite), "shard")
+                .sortWithinPartitions("shard", "hkey", "doc_id")
+                .write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy("shard")
+                .parquet(path)
             )
         for s in emptied:
             # errors PROPAGATE: suppressing a failed delete here would
@@ -1136,27 +1134,6 @@ def delete_docs_from_shards(
     finally:
         src.unpersist()
     return sorted(rewrite | emptied)
-
-
-def _with_overwrite_mode(spark: SparkSession, mode: str):
-    """Run a write under a specific partitionOverwriteMode and RESTORE
-    the previous session value — leaving 'dynamic' set would silently
-    change every later partitioned overwrite in the session (a re-laid
-    epoch would keep stale shards whose partition got no new rows)."""
-
-    def runner(fn):
-        key = "spark.sql.sources.partitionOverwriteMode"
-        prev = spark.conf.get(key, None)
-        spark.conf.set(key, mode)
-        try:
-            return fn()
-        finally:
-            if prev is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, prev)
-
-    return runner
 
 
 @register(

@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_spark.registry import register
+from etl_spark.session import rebind, scoped_session
 from etl_spark.tables import load, load_parallel
 
 # 60-bit integer from the first 15 hex chars of md5 — reproducible in
@@ -618,13 +619,14 @@ def connected_components(
       ``doc_id`` with the same ``n_parts`` (checkpoint preserves the
       physical partitioning), so the per-round join is co-partitioned
       — ONE exchange per round (the aggregate's), however many cores.
-    - AQE is disabled INSIDE the loop (restored in the finally): the
-      plan is fully determined by the pinned partition count, so
-      adaptive re-planning would only add per-stage scheduling
-      latency — at sf0.1 that fixed latency, not data, dominated the
-      loop (0.45–0.9 s/round on ~10.7k pairs, 8c/32c ratio 0.34).
-      The upstream pair pipeline still materializes under the
-      caller's AQE (the count job below runs BEFORE the scope).
+    - AQE is disabled INSIDE the loop, on a child session (the
+      caller's confs are never written): the plan is fully determined
+      by the pinned partition count, so adaptive re-planning would
+      only add per-stage scheduling latency — at sf0.1 that fixed
+      latency, not data, dominated the loop (0.45–0.9 s/round on
+      ~10.7k pairs, 8c/32c ratio 0.34). The upstream pair pipeline
+      still materializes under the caller's session and AQE (the
+      count job below), and the labels are rebound to it.
     - the convergence label-sum rides the round's own materializing
       action as an ``observe()`` metric over a noop sink (guide
       §1.4) instead of a separate aggregate subtree — one job per
@@ -634,29 +636,31 @@ def connected_components(
 
     spark = pairs.sparkSession
     sc = spark.sparkContext
+    # frames holding each round's persisted data, oldest first: they
+    # are released as they age out, and all of them if a round fails
     round_cache: list[DataFrame] = []
-    if checkpoint_dir is not None:
-        prior_ckpt_dir = sc._jsc.sc().getCheckpointDir()  # scala Option
-        prior_dir = prior_ckpt_dir.get() if prior_ckpt_dir.isDefined() else None
-        sc.setCheckpointDir(checkpoint_dir)
 
-        def _ckpt(df: DataFrame) -> DataFrame:
-            # Lazy checkpoints: the noop-sink round action materializes
-            # the persist; reliable checkpoint() then writes the RDD in
-            # its own job without re-running the (now cached) plan —
-            # the one-materialization property on the cluster path too
-            # (ADVICE r4). Superseded rounds unpersist as they age out.
-            out = df.persist().checkpoint(eager=False)
-            while len(round_cache) > 1:  # keep current + newest only
-                round_cache.pop(0).unpersist()
-            round_cache.append(df)
+    def _release(df: DataFrame) -> None:
+        if checkpoint_dir is None:
+            # localCheckpoint persisted the scanned RDD itself
+            df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+        else:
+            df.unpersist()
+
+    def _ckpt(df: DataFrame) -> DataFrame:
+        while len(round_cache) > 1:  # keep current + newest only
+            _release(round_cache.pop(0))
+        if checkpoint_dir is None:
+            out = df.localCheckpoint(eager=False)
+            round_cache.append(out)
             return out
-
-    else:
-        prior_dir = None
-
-        def _ckpt(df: DataFrame) -> DataFrame:
-            return df.localCheckpoint(eager=False)
+        # Lazy checkpoints: the noop-sink round action materializes
+        # the persist; reliable checkpoint() then writes the RDD in
+        # its own job without re-running the (now cached) plan —
+        # the one-materialization property on the cluster path too
+        # (ADVICE r4).
+        round_cache.append(df.persist())
+        return df.checkpoint(eager=False)
 
     # All four (src, dst) orientations INCLUDING self-loops from ONE
     # pass over pairs (an explode; a union of pairs with its own
@@ -692,32 +696,33 @@ def connected_components(
         .select("e.src", "e.dst")
         .persist()
     )
-    # Materialize the edge cache under the CALLER's confs (the pair
-    # pipeline upstream wants AQE's broadcast/skew handling) and size
-    # the loop's partitioning from the measured count — scale-adaptive
-    # by construction: 1 fat partition at fixture scale, ~edge-bytes /
-    # 64 MB partitions at cluster scale.
-    n_edges = edges_raw.count()
-    n_parts = max(1, -(-(n_edges * _CC_EDGE_BYTES) // _CC_TARGET_PART_BYTES))
-
-    _SCOPED = {
-        "spark.sql.adaptive.enabled": "false",
-        "spark.sql.shuffle.partitions": str(n_parts),
-    }
-    prior_conf: dict[str, str | None] = {}
-    for k in _SCOPED:
-        try:
-            prior_conf[k] = spark.conf.get(k)
-        except Exception:  # pragma: no cover - host-specific
-            prior_conf[k] = None
+    prior_dir = None
     edges = None
     try:
-        for k, v in _SCOPED.items():
-            spark.conf.set(k, v)
+        if checkpoint_dir is not None:
+            prior_ckpt_dir = sc._jsc.sc().getCheckpointDir()  # scala Option
+            prior_dir = prior_ckpt_dir.get() if prior_ckpt_dir.isDefined() else None
+            sc.setCheckpointDir(checkpoint_dir)
+        # Materialize the edge cache under the CALLER's confs (the pair
+        # pipeline upstream wants AQE's broadcast/skew handling) and
+        # size the loop's partitioning from the measured count —
+        # scale-adaptive by construction: 1 fat partition at fixture
+        # scale, ~edge-bytes / 64 MB partitions at cluster scale.
+        n_edges = edges_raw.count()
+        n_parts = max(
+            1, -(-(n_edges * _CC_EDGE_BYTES) // _CC_TARGET_PART_BYTES)
+        )
+        loop = scoped_session(
+            spark,
+            {
+                "spark.sql.adaptive.enabled": "false",
+                "spark.sql.shuffle.partitions": str(n_parts),
+            },
+        )
         # loop-invariant hoist (guide §2.4): partition edges by the
         # join key ONCE; every round then reuses the cached layout
         # instead of re-shuffling the edge list per round
-        edges = edges_raw.repartition(n_parts, "dst").persist()
+        edges = rebind(edges_raw, loop).repartition(n_parts, "dst").persist()
 
         def _round(df: DataFrame):
             """Materialize one round (checkpoint-backed) and return
@@ -759,16 +764,11 @@ def connected_components(
             if cur_sum == prev_sum:
                 break
             prev_sum = cur_sum
+    except BaseException:
+        for df in round_cache:
+            _release(df)
+        raise
     finally:
-        # restore the caller's confs even if a round raises (ADVICE
-        # r15): the returned labels are already materialized, so
-        # downstream consumers plan under the caller's session state.
-        for k, v in prior_conf.items():
-            if v is not None:
-                try:
-                    spark.conf.set(k, v)
-                except Exception:  # pragma: no cover - host-specific
-                    pass
         edges_raw.unpersist()  # no-op if already unpersisted above
         if edges is not None:
             edges.unpersist()
@@ -778,7 +778,7 @@ def connected_components(
         # persisted — they back the returned labels frame.
         if checkpoint_dir is not None and prior_dir is not None:
             sc.setCheckpointDir(prior_dir)
-    return labels
+    return rebind(labels, spark)
 
 
 def _duck_bands() -> str:

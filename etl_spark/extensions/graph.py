@@ -43,7 +43,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_spark.registry import register
+from etl_spark.registry import ADVISORY_COALESCE, register
 from etl_spark.tables import load
 
 SCALE = 10**12  # fixed-point scale for rank mass
@@ -140,6 +140,7 @@ _X85_ORACLE = f"""
     oracle=_X85_ORACLE,
     tags=("extension", "graph", "iterative", "scale"),
     doc="Fixed-point PageRank over the customer<->supplier trade graph.",
+    session_confs=ADVISORY_COALESCE,
 )
 def x85_pagerank_trade_graph(spark: SparkSession, sf: str) -> DataFrame:
     """Rank every customer and supplier by trade-graph centrality:
@@ -149,28 +150,9 @@ def x85_pagerank_trade_graph(spark: SparkSession, sf: str) -> DataFrame:
     Edges are one distinct aggregate over lineitem⋈orders, both
     orientations exploded from a single pass, persisted once and
     reused by all three rounds; per-round work is one skinny
-    (node, share) shuffle join plus a |V|-row aggregate.
-
-    CONF SIDE EFFECT (documented per ADVICE r15): this function sets
-    ``spark.sql.adaptive.coalescePartitions.parallelismFirst=false``
-    and deliberately does NOT restore it — the conf must still be in
-    force when the CALLER collects the returned lazy frame. Inside
-    the registry/bench every registered query's entry re-pins the
-    session default (``_SESSION_PINS``); direct library callers that
-    need the default afterwards must reset it themselves after
-    consuming the result."""
-    # The unrolled 3-round plan is ~70 static Exchanges of small
-    # (node, share) rows — shuffle COUNT, not bytes, dominates. Run it
-    # under AQE advisory-size coalescing (parallelismFirst=false, the
-    # Spark-docs-recommended production mode) so each round lands in
-    # few fat partitions; the conf must stick through the caller's
-    # collect, so it is set here (not scoped) and every registered
-    # query re-pins the session default via _SESSION_PINS
-    # (registry.py). Measured r15 interleaved A/B: 0.72–0.91 ratio,
-    # identical rows.
-    spark.conf.set(
-        "spark.sql.adaptive.coalescePartitions.parallelismFirst", "false"
-    )
+    (node, share) shuffle join plus a |V|-row aggregate."""
+    # ~70 static Exchanges of small (node, share) rows: shuffle COUNT
+    # dominates, hence the registration's ADVISORY_COALESCE pin
     li = load(spark, sf, "lineitem").select("l_orderkey", "l_suppkey")
     orders = load(spark, sf, "orders").select("o_orderkey", "o_custkey")
     pairs = (

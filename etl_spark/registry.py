@@ -17,6 +17,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
+from etl_spark.session import scoped_session
+
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
 # Runtime session confs every registered query's semantics depend on.
@@ -25,25 +27,19 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 # and CORRECTNESS_r10 showed x111/e13 flipping on to_date /
 # unix_timestamp under a session config our builder never reproduces
 # (VERDICT r10 "What's wrong" #1). Timezone-aware expressions resolve
-# the session TZ at ANALYSIS time (Catalyst's ResolveTimeZone rule), so
-# pinning immediately before the callable constructs its DataFrame is
-# sufficient and sticks through the driver's later collect(). Both keys
-# are runtime-settable. ANSI is pinned to the Spark 4.x default the
-# whole suite is developed and tested under, so cast/overflow/dividing
-# semantics cannot drift with the host session either.
+# the session TZ at ANALYSIS time (Catalyst's ResolveTimeZone rule)
+# from the session the plan is bound to, so running the callable on a
+# child session carrying these pins fixes its semantics through the
+# driver's later collect() without touching the caller's session. ANSI
+# is pinned to the Spark 4.x default the whole suite is developed and
+# tested under, so cast/overflow/dividing semantics cannot drift with
+# the host session either.
 _SESSION_PINS: dict[str, str] = {
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.ansi.enabled": "true",
-    # AQE partition-coalescing mode: the session default (true =
-    # maximize parallelism) is re-pinned per query because a few
-    # operators deliberately run under false (honor advisory partition
-    # size — the Spark-docs-recommended production mode) for
-    # shuffle-count-dominated plans: the CC fixpoint scopes+restores
-    # it itself (dedup.connected_components), and x85's unrolled
-    # 3-round PageRank pins it for its own collect (r15 optimization,
-    # guide §2.2 fewer/larger reduce partitions; measured interleaved
-    # A/B 0.72–0.91 ratio on x85, results identical). This pin is what
-    # guarantees the next query always starts from the default.
+    # AQE partition-coalescing mode: every query starts from the Spark
+    # default (true = maximize parallelism) whatever the host session
+    # says; ADVISORY_COALESCE overrides it per query.
     "spark.sql.adaptive.coalescePartitions.parallelismFirst": "true",
 }
 
@@ -51,17 +47,12 @@ _SESSION_PINS: dict[str, str] = {
 # Per-query override for shuffle-COUNT-dominated plans (guide §2.2
 # "fewer, larger reduce partitions"): honor
 # advisoryPartitionSizeInBytes instead of spreading every tiny shuffle
-# across all cores as sliver partitions. This is the Spark-docs-
-# recommended production mode, so it is the 100 TB-correct setting for
-# queries whose reduce sides are SKETCH-sized (KMV registers, CMS
-# rows, bottom-k heaps, posting aggregates) — bounded state that never
-# grows with the corpus. PERF_r15 measured those queries running
-# 1.7–3.7x FASTER at 8 cores than 32 under the default
-# (parallelismFirst=true): per-core task overhead exceeded their
-# compute. The override must stick through the driver's collect() on
-# the returned lazy frame, so it is applied at query ENTRY and the
-# next registered query's _SESSION_PINS restores the default — the
-# exact x85 mechanism (r15), now shared.
+# across all cores as sliver partitions — the Spark-docs-recommended
+# production mode, and 100 TB-correct for SKETCH-sized reduce sides
+# (KMV registers, CMS rows, bottom-k heaps, posting aggregates) whose
+# state never grows with the corpus. PERF_r15 measured those queries
+# 1.7–3.7x FASTER at 8 cores than 32 under the default; x85's ~70
+# small PageRank exchanges gained 0.72–0.91 (r15 A/B, identical rows).
 ADVISORY_COALESCE: dict[str, str] = {
     "spark.sql.adaptive.coalescePartitions.parallelismFirst": "false",
 }
@@ -70,27 +61,14 @@ ADVISORY_COALESCE: dict[str, str] = {
 def _pin_session(
     fn: QueryFn, session_confs: dict[str, str] | None = None
 ) -> QueryFn:
-    """Wrap a query fn so every invocation re-pins the session confs
-    in ``_SESSION_PINS`` (plus the spec's per-query ``session_confs``
-    overrides, applied after) on the caller-supplied session."""
+    """Wrap a query fn so every invocation runs on a child of the
+    caller's session carrying ``_SESSION_PINS`` plus the spec's
+    per-query ``session_confs`` overrides (session.scoped_session)."""
+    pins = {**_SESSION_PINS, **(session_confs or {})}
 
     @functools.wraps(fn)
     def run(spark: SparkSession, sf: str) -> DataFrame:
-        pins = (
-            {**_SESSION_PINS, **session_confs}
-            if session_confs
-            else _SESSION_PINS
-        )
-        for k, v in pins.items():
-            # defensive: the keys are runtime-settable on stock Spark,
-            # but if a host session ever rejects one, degrade to the
-            # un-pinned (r10) behavior for that key rather than failing
-            # every registered query on the set() itself
-            try:
-                spark.conf.set(k, v)
-            except Exception:  # pragma: no cover - host-specific
-                pass
-        return fn(spark, sf)
+        return fn(scoped_session(spark, pins), sf)
 
     return run
 
@@ -116,15 +94,13 @@ def register(
 ) -> Callable[[QueryFn], QueryFn]:
     """Decorator: register a query under ``name``.
 
-    SIDE EFFECT (ADVICE r11): the registered callable is wrapped by
-    ``_pin_session``, so EVERY invocation sets ``_SESSION_PINS``
-    (session timeZone=UTC, ansi.enabled=true) on the caller-supplied
-    SparkSession and deliberately does NOT restore the previous
-    values — the pin must stick through the driver's later
-    ``collect()`` on the returned (lazy) DataFrame, and a restore
-    before that collect would re-break the r10 TZ class. Hosts that
-    need different session semantics for unrelated work should
-    re-set those confs after consuming the result.
+    The registered callable is wrapped by ``_pin_session``: it runs on
+    a cached child of the caller's SparkSession carrying
+    ``_SESSION_PINS`` plus ``session_confs``, and the returned frame is
+    bound to that child, so the pins hold through the caller's
+    ``collect()`` while the caller's confs are never written. Caller
+    confs changed after the first registered call on a session do not
+    reach later registered queries (the child is cloned once).
     """
 
     def deco(fn: QueryFn) -> QueryFn:
@@ -266,9 +242,9 @@ REVERIFY_THIS_ROUND: frozenset[str] = frozenset(
 
 
 def all_specs() -> dict[str, QuerySpec]:
-    """All registered specs, driver-window order. Note each spec's
-    ``fn`` pins ``_SESSION_PINS`` on the session it is called with and
-    does not restore prior values (see ``register``)."""
+    """All registered specs, driver-window order. Each spec's ``fn``
+    runs on a pinned child of the session it is called with and
+    returns a frame bound to that child (see ``register``)."""
     _ensure_loaded()
     # A typo'd or renamed entry would silently fall out of the window
     # instead of pinning it — fail loudly instead (ADVICE r3).

@@ -9,8 +9,10 @@ multiple of parallelism, and Arrow is on for every pandas boundary.
 from __future__ import annotations
 
 import os
+import threading
+from collections import OrderedDict
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 # Session-wide defaults. Rationale per key:
 #  - adaptive.*: AQE re-plans at runtime (coalesces small shuffle
@@ -57,3 +59,45 @@ def get_spark(
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+# Child sessions by (caller sessionUUID, conf set), least recently used
+# first; reuse keeps tables._SCAN_CACHE (keyed per session) hitting.
+_CHILDREN: OrderedDict[tuple[str, frozenset], SparkSession] = OrderedDict()
+_CHILDREN_MAX = 32
+_CHILDREN_LOCK = threading.Lock()
+
+
+def scoped_session(spark: SparkSession, confs: dict[str, str]) -> SparkSession:
+    """A child of ``spark`` running under ``confs``, so work can scope
+    confs without writing them into a session other threads share.
+
+    ``cloneSession()`` copies the caller's confs, temp views and UDFs
+    (``newSession()`` would drop its runtime confs) and shares its
+    SparkContext, catalog and cache manager. ``confs`` are set once,
+    when the child is made; the child is reused for the same (caller,
+    confs), so later changes to the caller's confs do not reach it."""
+    key = (str(spark._jsparkSession.sessionUUID()), frozenset(confs.items()))
+    with _CHILDREN_LOCK:
+        child = _CHILDREN.get(key)
+        if child is None:
+            child = SparkSession(
+                spark.sparkContext, spark._jsparkSession.cloneSession()
+            )
+            for k, v in confs.items():
+                child.conf.set(k, v)
+            if len(_CHILDREN) >= _CHILDREN_MAX:
+                _CHILDREN.popitem(last=False)
+            _CHILDREN[key] = child
+        _CHILDREN.move_to_end(key)
+        return child
+
+
+def rebind(df: DataFrame, session: SparkSession) -> DataFrame:
+    """``df``'s analyzed plan as a frame of ``session``: it plans and
+    runs under that session's confs, and reuses persisted or
+    checkpointed data through the shared cache manager."""
+    jdf = session._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+        session._jsparkSession, df._jdf.queryExecution().analyzed()
+    )
+    return DataFrame(jdf, session)

@@ -117,13 +117,18 @@ def truncate_load(df: DataFrame, table: str) -> None:
 @contextlib.contextmanager
 def _dynamic_overwrite(spark: SparkSession):
     """Set partitionOverwriteMode=dynamic for ONE write and RESTORE
-    the previous value (the corpus.py `_with_overwrite_mode` rule).
-    Leaving 'dynamic' set poisoned every later partitioned overwrite
-    in the session — r9 finding: dynamic-mode jobs also skip the
-    ``_SUCCESS`` marker, so a later ``ivf_index_append`` delta looked
-    forever-uncommitted and streamed index refreshes silently
-    retrieved nothing (caught by the full-suite run of
-    test_streaming_knn_probe_admit_refreshes_index)."""
+    the previous value. Leaving 'dynamic' set poisoned every later
+    partitioned overwrite in the session — r9 finding: dynamic-mode
+    jobs also skip the ``_SUCCESS`` marker, so a later
+    ``ivf_index_append`` delta looked forever-uncommitted and streamed
+    index refreshes silently retrieved nothing (caught by the
+    full-suite run of test_streaming_knn_probe_admit_refreshes_index).
+
+    It stays a session-conf write: ``insertInto`` ignores the
+    per-write ``partitionOverwriteMode`` option (untouched partitions
+    are still wiped), and a write from a child session would leave the
+    caller's relation cache stale (the foreachBatch hazard in
+    streaming/sinks.py)."""
     key = "spark.sql.sources.partitionOverwriteMode"
     prev = spark.conf.get(key, None)
     spark.conf.set(key, "dynamic")

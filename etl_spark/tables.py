@@ -9,6 +9,8 @@ filters and column pruning push down into it (verified in tests via
 
 from __future__ import annotations
 
+import threading
+
 from pyspark.sql import DataFrame, SparkSession
 
 TABLES = (
@@ -70,7 +72,8 @@ def events_ts_physical_type(path: str) -> str:
 # exists for), so a frame analyzed under a different timeZone must
 # never be served to a pinned query (ADVICE r15).
 _SCAN_CACHE: dict[tuple[str, str, int, str], DataFrame] = {}
-_SCAN_CACHE_MAX = 64  # tables × a few sessions; evict oldest beyond this
+_SCAN_CACHE_MAX = 64  # tables × a few sessions; evict least recently used
+_SCAN_LOCK = threading.Lock()  # callers on other threads share the memo
 
 
 def _session_key(spark: SparkSession) -> str:
@@ -145,7 +148,7 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     else:
         analysis_state = ""
     key = (_session_key(spark), path, _layout_fingerprint(path), analysis_state)
-    cached = _SCAN_CACHE.get(key)
+    cached = _memo_get(key)
     if cached is not None:
         return cached
     if name == "events":
@@ -174,20 +177,30 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
+def _memo_get(key: tuple[str, str, int, str]) -> DataFrame | None:
+    # re-insert on hit: eviction then drops cold entries, not hot tables
+    with _SCAN_LOCK:
+        df = _SCAN_CACHE.pop(key, None)
+        if df is not None:
+            _SCAN_CACHE[key] = df
+        return df
+
+
 def _memo_put(key: tuple[str, str, int, str], df: DataFrame) -> None:
     """Insert + eviction (ADVICE r15 — do NOT wipe other LIVE
     sessions' entries wholesale; two alternating sessions would evict
     each other on every miss): drop only (a) superseded entries for
     THIS path — a stale fingerprint reflects bytes no longer on disk,
-    dead weight whichever session owns it — then (b) oldest-inserted
-    entries past the size cap so stopped sessions' handles can never
-    accumulate unboundedly."""
+    dead weight whichever session owns it — then (b) least recently
+    used entries past the size cap so stopped sessions' handles can
+    never accumulate unboundedly."""
     path = key[1]
-    for k in [k for k in _SCAN_CACHE if k[1] == path and k[2] != key[2]]:
-        del _SCAN_CACHE[k]
-    while len(_SCAN_CACHE) >= _SCAN_CACHE_MAX:
-        del _SCAN_CACHE[next(iter(_SCAN_CACHE))]
-    _SCAN_CACHE[key] = df
+    with _SCAN_LOCK:
+        for k in [k for k in _SCAN_CACHE if k[1] == path and k[2] != key[2]]:
+            del _SCAN_CACHE[k]
+        while len(_SCAN_CACHE) >= _SCAN_CACHE_MAX:
+            del _SCAN_CACHE[next(iter(_SCAN_CACHE))]
+        _SCAN_CACHE[key] = df
 
 
 def scan_parquet(spark: SparkSession, path: str) -> DataFrame:
@@ -200,7 +213,7 @@ def scan_parquet(spark: SparkSession, path: str) -> DataFrame:
     compaction / overwrite at the same path misses the memo) and the
     same bounded eviction as ``load``."""
     key = (_session_key(spark), path, _layout_fingerprint(path), "")
-    cached = _SCAN_CACHE.get(key)
+    cached = _memo_get(key)
     if cached is not None:
         return cached
     df = spark.read.parquet(path)

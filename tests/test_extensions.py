@@ -298,7 +298,7 @@ def test_salted_join_deterministic_on_events(spark, sf_dir):
     assert a == b
 
 
-@settings(max_examples=15, deadline=None)
+@settings(max_examples=10, deadline=None)
 @given(
     edges=st.lists(
         st.tuples(st.integers(0, 30), st.integers(0, 30)),
@@ -306,7 +306,6 @@ def test_salted_join_deterministic_on_events(spark, sf_dir):
         max_size=40,
     )
 )
-@pytest.mark.slow
 def test_connected_components_matches_union_find(edges):
     """Property: on arbitrary small graphs (self-loops, parallel
     edges, many components), the distributed hash-to-min labels must

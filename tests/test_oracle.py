@@ -230,10 +230,12 @@ def test_type_parity_gate_catches_family_mismatch():
 # the driver runs every query inside ITS OWN SparkSession, so a query
 # whose semantics read the session timezone (to_date / unix_timestamp /
 # CAST(ts AS DATE) over the naive `ts` column) is only correct if the
-# registry's _pin_session wrapper re-pins UTC on each call. Re-run the
-# parity gate for every timestamp-touching oracle with the session TZ
-# deliberately skewed to Asia/Shanghai just before the call — the
-# wrapper must win, or this catches locally what r10's driver caught.
+# registry's _pin_session wrapper pins UTC on the session it runs on.
+# Re-run the parity gate for every timestamp-touching oracle from a
+# session whose TZ is deliberately skewed to Asia/Shanghai before its
+# first registered call (its pinned child is cloned from that state) —
+# the wrapper must win, or this catches locally what r10's driver
+# caught.
 _TZ_RE = re.compile(
     r"\bts\b|\bepoch\b|to_date|date_trunc|date_diff|AS DATE|::DATE"
     r"|to_timestamp|unix_timestamp|strftime|INTERVAL",
@@ -244,25 +246,31 @@ TZ_SENSITIVE_SPECS = [
 ]
 
 
+@pytest.fixture(scope="module")
+def skewed_spark(spark):
+    s = spark.newSession()
+    s.conf.set("spark.sql.session.timeZone", "Asia/Shanghai")
+    return s
+
+
 @pytest.mark.parametrize("name", TZ_SENSITIVE_SPECS)
-def test_oracle_parity_under_skewed_session_tz(spark, sf_dir, name):
+def test_oracle_parity_under_skewed_session_tz(skewed_spark, sf_dir, name):
     if not sf_dir.rstrip("/").endswith("sf0.001"):
         pytest.skip("TZ sweep runs at the smallest SF only (config test)")
-    spark.conf.set("spark.sql.session.timeZone", "Asia/Shanghai")
-    try:
-        _assert_parity(spark, sf_dir, name)
-    finally:
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
+    _assert_parity(skewed_spark, sf_dir, name)
 
 
-def test_registry_pins_session_confs(spark, sf_dir):
-    """The wrapper itself: any registered fn must reset the pins."""
+def test_registry_pins_session_confs(skewed_spark, sf_dir):
+    """The wrapper itself: a registered fn's frame carries the pins,
+    and the caller's session keeps its own values."""
     from etl_spark.registry import _SESSION_PINS
 
-    spark.conf.set("spark.sql.session.timeZone", "Asia/Shanghai")
-    SPECS[ORACLE_SPECS[0]].fn(spark, sf_dir)
+    before = dict(skewed_spark.conf.getAll)
+    df = SPECS[ORACLE_SPECS[0]].fn(skewed_spark, sf_dir)
     for k, v in _SESSION_PINS.items():
-        assert spark.conf.get(k) == v
+        assert df.sparkSession.conf.get(k) == v
+    assert dict(skewed_spark.conf.getAll) == before
+    assert before["spark.sql.session.timeZone"] == "Asia/Shanghai"
 
 
 # Queries allowed to be empty at the tiny local SF only. At sf0.01

@@ -112,3 +112,25 @@ def test_memo_bounded_one_entry_per_path(spark, sf_dir, tmp_path):
     load(spark, str(d), "nation")
     path = f"{d}/nation.parquet"
     assert sum(1 for k in _SCAN_CACHE if k[1] == path) == 1
+
+
+def test_hot_entry_survives_insert_past_cap(spark, tmp_path, monkeypatch):
+    # eviction is least-recently-USED: a table read on every query
+    # outlives colder entries inserted after it
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from etl_spark import tables
+
+    monkeypatch.setattr(tables, "_SCAN_CACHE", {})
+    monkeypatch.setattr(tables, "_SCAN_CACHE_MAX", 3)
+    paths = [str(tmp_path / f"t{i}.parquet") for i in range(4)]
+    for p in paths:
+        pq.write_table(pa.table({"x": [1]}), p)
+    hot = tables.scan_parquet(spark, paths[0])
+    cold = tables.scan_parquet(spark, paths[1])
+    tables.scan_parquet(spark, paths[2])
+    assert tables.scan_parquet(spark, paths[0]) is hot
+    tables.scan_parquet(spark, paths[3])  # past the cap
+    assert tables.scan_parquet(spark, paths[0]) is hot
+    assert tables.scan_parquet(spark, paths[1]) is not cold
