@@ -26,6 +26,8 @@ from typing import Protocol
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_spark.sources.writers import append_row
+
 CONDITIONS = ("not_empty", "rows_gt", "rows_lt", "rows_eq", "rows_neq")
 
 
@@ -114,7 +116,7 @@ class AlertSpec:
     sql: str
     condition: str = "not_empty"
     threshold: int = 0
-    export_path: str | None = None  # csv report on trigger (S8 edge)
+    export_path: str | None = None  # report on trigger: .xlsx styled, else csv (S8)
     max_export_rows: int = 100_000
 
 
@@ -198,19 +200,18 @@ class AlertEngine:
     def _log(self, spec: AlertSpec, r: AlertResult) -> None:
         """T10 alert audit log (log_sql_alert_execution,
         web_scheduler.py:1129-1144)."""
-        self.spark.createDataFrame(
-            [
-                (
-                    spec.alert_id,
-                    spec.name,
-                    r.checked_at,
-                    r.n_rows,
-                    r.triggered,
-                    r.error or "",
-                )
-            ],
-            schema=ALERT_LOG_SCHEMA,
-        ).write.mode("append").insertInto(f"{self.db}.alert_logs")
+        append_row(
+            self.spark,
+            f"{self.db}.alert_logs",
+            (
+                spec.alert_id,
+                spec.name,
+                r.checked_at,
+                r.n_rows,
+                r.triggered,
+                r.error or "",
+            ),
+        )
 
     def alert_logs(self) -> DataFrame:
         return self.spark.table(f"{self.db}.alert_logs")

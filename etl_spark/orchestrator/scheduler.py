@@ -20,10 +20,11 @@ managed Parquet table, and the gate/retry decisions are the SURVEY
 relational layer. `now` is always passed in, so tests never sleep; the
 1-second daemon loop is `run_loop`, a thin wrapper around `tick`.
 
-Scale note: one tick issues exactly ONE small Spark job — a single
+Scale note: one tick issues exactly ONE small query — a single
 window pass (`tick_snapshot`) yielding latest status, consecutive
 failures, and last execution time per task — regardless of task
-count. The reference's per-task N+1 SELECTs (:1327-1369) collapse
+count (under AQE it runs as two jobs: the shuffle stage and the
+result). The reference's per-task N+1 SELECTs (:1327-1369) collapse
 into one set-based query over the whole log table.
 """
 
@@ -38,6 +39,7 @@ from pyspark.sql import SparkSession, Window
 from pyspark.sql import functions as F
 
 from etl_spark.orchestrator.cron import CronError, next_fire
+from etl_spark.sources.writers import append_row
 
 # T4: monitoring tasks with no schedule at all default to a 5-minute
 # cadence (web_scheduler.py:1483-1494, :1530-1538)
@@ -107,9 +109,11 @@ class Orchestrator:
         self, task_id: int, status: str, now: datetime, details: str = ""
     ) -> None:
         spec = self.tasks[task_id].spec
-        self.spark.createDataFrame(
-            [(task_id, spec.name, status, now, details)], schema=LOG_SCHEMA
-        ).write.mode("append").insertInto(f"{self.db}.task_logs")
+        append_row(
+            self.spark,
+            f"{self.db}.task_logs",
+            (task_id, spec.name, status, now, details),
+        )
 
     def logs(self):
         return self.spark.table(f"{self.db}.task_logs")
@@ -159,7 +163,7 @@ class Orchestrator:
         {task_id: (latest_status, consecutive_failures,
         last_execution_time)}. Latest status is the rn=1 row;
         consecutive failures = (first non-failed rn) - 1, or the full
-        lookback depth when every recent run failed. One Spark job per
+        lookback depth when every recent run failed. One query per
         tick regardless of task count (the r1 version re-ran a
         per-task consecutive_failures job for each retry-eligible
         task)."""
@@ -254,15 +258,6 @@ class Orchestrator:
                 continue
             outcomes[tid] = self.run_task(tid, now)
         return outcomes
-
-    def _last_execution_time(self, task_id: int) -> datetime | None:
-        rows = (
-            self.logs()
-            .filter(F.col("task_id") == task_id)
-            .agg(F.max("execution_time").alias("t"))
-            .collect()
-        )
-        return rows[0].t if rows and rows[0].t is not None else None
 
     def run_loop(self, tick_seconds: float = 1.0, stop_after: int | None = None) -> None:
         """The daemon loop (1 s poll, web_scheduler.py:1556). Bounded

@@ -60,6 +60,33 @@ def append(df: DataFrame, table: str) -> None:
     spark.catalog.refreshTable(table)
 
 
+def append_row(spark: SparkSession, table: str, values: tuple) -> None:
+    """Append ONE row to an existing table, values in column order —
+    the reference's per-event audit `INSERT INTO ... VALUES`
+    (web_scheduler.py:1099-1115, :1129-1144).
+
+    An inline VALUES list is a driver-side LocalRelation, so the
+    insert is one single-task write job and one file;
+    ``createDataFrame([row]).write.insertInto`` goes through a Python
+    list → RDD conversion and leaves two files per row, at ~0.5 s a row.
+    Every value is a bound parameter, never SQL text, so error messages
+    with quotes, semicolons or ``:name`` land verbatim. Naive
+    ``datetime`` values are bound as text and cast to TIMESTAMP_NTZ: a
+    bound Python datetime is a session-time-zone TIMESTAMP and would
+    land shifted by the session offset."""
+    import datetime as _dt
+
+    slots, args = [], {}
+    for i, v in enumerate(values):
+        if isinstance(v, _dt.datetime):
+            slots.append(f"CAST(:p{i} AS TIMESTAMP_NTZ)")
+            v = v.isoformat(sep=" ")
+        else:
+            slots.append(f":p{i}")
+        args[f"p{i}"] = v
+    spark.sql(f"INSERT INTO {table} VALUES ({', '.join(slots)})", args=args)
+
+
 def append_evolve(df: DataFrame, table: str) -> list[str]:
     """S5 append with SCHEMA EVOLUTION: columns present in ``df`` but
     not in the table are added via `ALTER TABLE ... ADD COLUMNS`

@@ -145,14 +145,21 @@ def reparse_date_columns(
 ) -> list[list[object]]:
     """The reference's multi-pattern re-parse: any string column whose
     non-null values ALL match one of DATE_PATTERNS (and at least one
-    value exists) becomes datetime-typed. Mutates and returns rows."""
+    value exists) becomes datetime-typed. Parsing a column stops at its
+    first non-date value, so a text column costs one failed parse, not
+    one per row. Mutates and returns rows."""
     n_cols = len(columns)
     for ci in range(n_cols):
         vals = [r[ci] for r in rows if r[ci] is not None]
         if not vals or not all(isinstance(v, str) for v in vals):
             continue
-        parsed = [try_parse_date(v) for v in vals]
-        if all(p is not None for p in parsed):
+        parsed = []
+        for v in vals:
+            d = try_parse_date(v)
+            if d is None:
+                break
+            parsed.append(d)
+        else:
             it = iter(parsed)
             for r in rows:
                 if r[ci] is not None:

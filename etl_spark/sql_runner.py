@@ -132,13 +132,9 @@ def run_script(
     for stmt in split_statements(script):
         kind = classify(stmt)
         try:
-            df = spark.sql(stmt)
-            if kind == "exec":
-                # spark.sql already executed the command (commands are
-                # eager); the returned df carries any summary output
-                results.append(StatementResult(stmt, kind, df=df))
-            else:
-                results.append(StatementResult(stmt, kind, df=df))
+            # commands run eagerly inside spark.sql; their df carries
+            # any summary output
+            results.append(StatementResult(stmt, kind, df=spark.sql(stmt)))
         except Exception as ex:  # noqa: BLE001 — per-statement error capture
             results.append(StatementResult(stmt, kind, error=str(ex)))
             if stop_on_error:

@@ -480,9 +480,10 @@ def test_write_excel_styled(spark, tmp_path):
     assert cells["D2"].find("m:v", ns).text == "7"
 
 
-def test_xlsx_reparse_only_full_date_columns():
+def test_xlsx_reparse_only_full_date_columns(monkeypatch):
     """A string column with ONE non-date value must stay text (the
     reference re-parses per-column only when every value matches)."""
+    from etl_spark.sources import xlsx_writer
     from etl_spark.sources.xlsx_writer import reparse_date_columns
 
     rows = [["2024-06-15", "x1"], ["not-a-date", "x2"]]
@@ -495,6 +496,24 @@ def test_xlsx_reparse_only_full_date_columns():
     out2 = reparse_date_columns(["d", "s"], rows2)
     assert out2[0][0] == dt.datetime(2024, 6, 15)
     assert out2[1][0] == dt.datetime(2024, 7, 1)  # %Y%m%d pattern
+
+    # every value a date except the LAST: the column stays text
+    rows3 = [["2024-06-15"], ["2024/06/16"], ["20240617"], ["shop-A"]]
+    out3 = reparse_date_columns(["d"], rows3)
+    assert [r[0] for r in out3] == ["2024-06-15", "2024/06/16", "20240617", "shop-A"]
+
+    # a text column costs ONE failed parse, not one per row
+    calls = []
+
+    def counting(s):
+        calls.append(s)
+        return None
+
+    monkeypatch.setattr(xlsx_writer, "try_parse_date", counting)
+    rows = [[f"sku-{i}"] for i in range(2000)]
+    out = reparse_date_columns(["sku"], rows)
+    assert calls == ["sku-0"]
+    assert out[-1] == ["sku-1999"]
 
 
 def test_landing_orc_and_text(spark, tmp_path):
