@@ -22,7 +22,7 @@ from __future__ import annotations
 import math
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 from etl_spark.sources.writers import (
     _overwrite_partitions,
@@ -112,15 +112,19 @@ def compact_table(
 
             from etl_spark.sources.zonemap import zorder_column
 
-            packed = (
-                df.withColumn("__zv", zorder_column(df, cluster_by))
-                .repartitionByRange(n_out, F.col("__zv"))
-                .sortWithinPartitions("__zv")
-                .drop("__zv")
-            )
+            def relayout(staged: DataFrame) -> DataFrame:
+                return (
+                    staged.withColumn("__zv", zorder_column(staged, cluster_by))
+                    .repartitionByRange(n_out, F.col("__zv"))
+                    .sortWithinPartitions("__zv")
+                    .drop("__zv")
+                )
         else:
-            packed = df.repartition(n_out)
-        _overwrite_self(packed, table)
+
+            def relayout(staged: DataFrame) -> DataFrame:
+                return staged.repartition(n_out)
+
+        _overwrite_self(df, table, relayout=relayout)
         after = sum(len(v) for v in file_inventory(spark, table).values())
         return {
             "partitions_compacted": 1,

@@ -194,15 +194,14 @@ class Orchestrator:
             r.task_id: (r.latest_status, r.consec_failures, r.last_time) for r in rows
         }
 
-    def can_execute(self, task_id: int, latest: dict[int, str] | None = None) -> bool:
+    def can_execute(self, task_id: int, latest: dict[int, str]) -> bool:
         """T7 dependency gate: every dependency's latest run succeeded
-        (A7 bool_and shape, web_scheduler.py:1231-1286). A dependency
-        that never ran blocks execution (status None check :1277-1280)."""
+        (A7 bool_and shape, web_scheduler.py:1231-1286), read from the
+        tick's ``latest`` status snapshot. A dependency that never ran
+        blocks execution (status None check :1277-1280)."""
         deps = self.tasks[task_id].spec.dependencies
         if not deps:
             return True
-        if latest is None:
-            latest = self.latest_statuses()
         return all(latest.get(d) == "success" for d in deps)
 
     # -- execution ---------------------------------------------------------

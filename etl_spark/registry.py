@@ -12,6 +12,10 @@ name before hashing values.
 from __future__ import annotations
 
 import functools
+import glob
+import json
+import os
+import re
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
@@ -121,13 +125,11 @@ def register(
 def _ensure_loaded() -> None:
     """Import every module that registers queries (idempotent).
 
-    ORDER MATTERS for the driver's correctness snapshot: r1 recorded
-    exactly the first 50 registered queries (insertion order), leaving
-    the extensions/advanced families without driver rows despite all
-    passing the identical local oracle gate. The extension + advanced
-    modules therefore register FIRST so the driver's hard signal
-    covers them; the relational/scalar/analytics families (all 50
-    green in CORRECTNESS_r01.json) follow."""
+    Registration order is the tie-break of the driver window
+    (``all_specs``) among queries last checked in the same round, and
+    the whole order when no snapshot exists. The extension + advanced
+    modules register FIRST so never-checked families lead; the
+    relational/scalar/analytics families follow."""
     import etl_spark.extensions.dedup  # noqa: F401
     import etl_spark.extensions.similarity  # noqa: F401
     import etl_spark.extensions.textstats  # noqa: F401
@@ -154,116 +156,42 @@ def _ensure_loaded() -> None:
     import etl_spark.sources.skipquery  # noqa: F401  (registers x141)
 
 
-# The driver's correctness snapshot covers only the FIRST 50 registered
-# queries per round (insertion order). This list pins the front of the
-# window each round so hard-signal rows land where they're most needed;
-# unlisted queries follow in module-registration order.
-#
-# Rotation policy (enforced by tests/test_window_rotation.py, not just
-# this comment — VERDICT r6 "Next round" #3): oldest-first dominance.
-# Never-driver-checked queries count as infinitely stale and lead; then
-# queries whose last CORRECTNESS row is oldest; ``oracle=None`` queries
-# never occupy a slot (their rows-only check is a permanent weak
-# signal — burning a hard-signal slot on them is waste, r5 lesson).
-#
-# Round-15 window (tools/rotate_window.py output + VERDICT r14 #1):
-#   the ENTIRE 46-query r10-stale cohort (x72/x48 lead as the r14
-#   runners-up, then the media/curation/warehouse/graph/event rows,
-#   oldest-first in registration order) plus the round's new
-#   registrations, which are never-driver-checked and lead per policy
-#   rule 1 (they displace the 4 r11-stale dedup heads that pad the
-#   tail until the new queries land). After this round nothing
-#   registered is last-green before r11 (VERDICT r14 #1's done bar).
-_DRIVER_WINDOW_PRIORITY: tuple[str, ...] = (
-    # -- last green r10 (the r15 rotation cohort, registration order)
-    "x72_incremental_knn_join",
-    "x48_quality_gate_agreement",
-    "x107_bigram_pmi",
-    "x15_media_decode",
-    "x95_image_neardup",
-    "x104_image_dup_clusters",
-    "x101_incremental_image_neardup",
-    "x99_media_resize",
-    "x100_frame_stats",
-    "x16_binary_meta",
-    "x25_decontaminate",
-    "x45_split_token_budget",
-    "x47_curated_corpus",
-    "x49_multimodal_curated",
-    "x50_segment_dedup",
-    "x51_temperature_mix_sample",
-    "x52_training_order",
-    "x54_lm_quality_score",
-    "x55_split_leakage",
-    "x114_bitmap_distinct",
-    "x116_rolling_distinct",
-    "x106_bm25_search",
-    "x115_triangle_clustering",
-    "x117_bfs_levels",
-    "a07_rollup",
-    "a08_count_distinct",
-    "j08_range_join",
-    "f10_explode_unnest",
-    "w05_ntile_quartiles",
-    "w06_trailing_window",
-    "x96_cohort_ltv",
-    "x97_inventory_aging",
-    "x98_abc_pareto",
-    "x102_new_vs_returning",
-    "x103_interpurchase_gaps",
-    "x105_ship_sla_monthly",
-    "x118_peak_active_orders",
-    "e10_weekly_retention",
-    "e11_windowed_conversion",
-    "e12_time_to_convert",
-    "e14_dau_wau_stickiness",
-    "x108_revenue_trend",
-    "x110_corr_matrix",
-    "x112_mad_outliers",
-    "x119_price_histogram",
-    "x120_weighted_percentiles",
-    # -- r15 registrations (never driver-checked, policy rule 1)
-    "x141_skip_scan",
-    "x142_inventory_turns",
-    "x143_backlog_aging",
-    "x144_supplier_leadtime",
-)
-# Queries whose SEMANTICS changed this round and therefore justify a
-# window slot even though their last driver row is recent (the r5
-# de-vacuification precedent). tests/test_window_rotation.py exempts
-# these from the oldest-first dominance check; clear it when the
-# re-verification lands.
-REVERIFY_THIS_ROUND: frozenset[str] = frozenset(
-    # empty this round: x22's oracle-backed re-verification landed in
-    # CORRECTNESS_r13 (50/50 green), so no query's semantics justify a
-    # slot ahead of the oldest-first ranking
-    ()
-)
+# Directory of the committed driver snapshots ``CORRECTNESS_r<N>.json``
+# (the repository root, beside the package).
+SNAPSHOT_DIR = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _last_checked_rounds() -> dict[str, int]:
+    """Each query's newest driver round: the highest ``N`` among the
+    ``CORRECTNESS_r<N>.json`` snapshots in ``SNAPSHOT_DIR`` that hold
+    a row for it. Read afresh on every call, so committing a snapshot
+    rotates the driver window with no source edit."""
+    last: dict[str, int] = {}
+    for path in glob.glob(os.path.join(SNAPSHOT_DIR, "CORRECTNESS_r*.json")):
+        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", os.path.basename(path))
+        if not m:
+            continue
+        with open(path) as fh:
+            for name in json.load(fh):
+                last[name] = max(last.get(name, -1), int(m.group(1)))
+    return last
 
 
 def all_specs() -> dict[str, QuerySpec]:
     """All registered specs, driver-window order. Each spec's ``fn``
     runs on a pinned child of the session it is called with and
-    returns a frame bound to that child (see ``register``)."""
+    returns a frame bound to that child (see ``register``).
+
+    The driver's correctness snapshot covers only the FIRST 50 queries
+    of this order, so it is oldest-first (tests/test_window_rotation.py):
+    oracle-backed queries lead (an ``oracle=None`` query's rows-only
+    check would waste a slot), then the least recently driver-checked
+    (never checked = -1), then registration order."""
     _ensure_loaded()
-    # A typo'd or renamed entry would silently fall out of the window
-    # instead of pinning it — fail loudly instead (ADVICE r3).
-    unknown = set(_DRIVER_WINDOW_PRIORITY) - set(_REGISTRY)
-    if unknown:
-        raise ValueError(
-            f"_DRIVER_WINDOW_PRIORITY names not in the registry: {sorted(unknown)}"
-        )
-    # the list IS the 50-slot window: fewer wastes hard-signal slots on
-    # whatever registers first; more silently pushes the tail past the
-    # driver's cutoff while looking pinned
-    if len(_DRIVER_WINDOW_PRIORITY) != 50:
-        raise ValueError(
-            f"_DRIVER_WINDOW_PRIORITY must name exactly the 50 driver "
-            f"window slots, got {len(_DRIVER_WINDOW_PRIORITY)}"
-        )
-    prio = {n: i for i, n in enumerate(_DRIVER_WINDOW_PRIORITY)}
-    order = {n: i for i, n in enumerate(_REGISTRY)}
-    names = sorted(_REGISTRY, key=lambda n: (prio.get(n, len(prio)), order[n]))
+    last = _last_checked_rounds()
+    names = sorted(
+        _REGISTRY, key=lambda n: (_REGISTRY[n].oracle is None, last.get(n, -1))
+    )
     return {n: _REGISTRY[n] for n in names}
 
 

@@ -17,8 +17,8 @@ once per fixture generation: ``orders`` z-ordered on
 Bloom index on the equality column and a zone map on both. At 100 TB
 the layout is the table's real partition layout and the indexes are
 maintained incrementally (bloom_refresh / zonemap_refresh, exercised
-in tests); file-count scaling of the pruning fraction is measured in
-tools/quiet_bench_r15_skip.py.
+in tests); file-count scaling of the pruning fraction is recorded in
+BENCH_QUIET_r15.json.
 """
 
 from __future__ import annotations

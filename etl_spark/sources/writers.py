@@ -26,6 +26,7 @@ the same catalog.
 from __future__ import annotations
 
 import contextlib
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -454,12 +455,21 @@ def _bucket_spec(spark: SparkSession, table: str) -> tuple[int, list[str], list[
     return int(n), cols(rows.get("Bucket Columns")), cols(rows.get("Sort Columns"))
 
 
-def _overwrite_self(df: DataFrame, table: str) -> None:
+def _overwrite_self(
+    df: DataFrame,
+    table: str,
+    relayout: Callable[[DataFrame], DataFrame] | None = None,
+) -> None:
     """Overwrite ``table`` with a plan that reads from it: stage the
     rows into a temp table, then overwrite from the staged copy —
     PRESERVING the table's bucketing/sort layout (a plain overwrite
     would silently drop the bucket spec, and with it every
     zero-shuffle join downstream).
+
+    ``relayout`` is applied to the staged copy before the final write.
+    A file layout must be made there: re-reading the staged table
+    packs its file splits into new partitions, so partitioning done
+    before the staging hop does not survive into the table's files.
 
     On Delta/Iceberg this whole helper disappears (native DML with
     snapshot isolation); parquet managed tables need the staging hop
@@ -470,7 +480,10 @@ def _overwrite_self(df: DataFrame, table: str) -> None:
     staging = _staging_name(table)
     df.write.format("parquet").mode("overwrite").saveAsTable(staging)
     try:
-        writer = spark.table(staging).write.format("parquet").mode("overwrite")
+        staged = spark.table(staging)
+        if relayout is not None:
+            staged = relayout(staged)
+        writer = staged.write.format("parquet").mode("overwrite")
         if n_buckets:
             writer = writer.bucketBy(n_buckets, *bucket_cols)
             if sort_cols:

@@ -18,9 +18,10 @@ import os
 
 import pytest
 
+from etl_spark.plans.inspect import node_count
 from etl_spark.registry import all_specs
 
-from tests.test_plans import node_count, plan_of
+from tests.test_plans import plan_of
 
 LOCK_PATH = os.path.join(os.path.dirname(__file__), "plan_shapes.json")
 
@@ -52,3 +53,7 @@ def test_plan_shape_locked(spark, name):
             f"{name}: {node} count {got} exceeds locked {locked[node]} — a plan "
             f"regression, or regenerate tests/plan_shapes.json deliberately"
         )
+    assert node_count(plan, "BatchEvalPython") == 0, (
+        f"{name}: row-at-a-time Python UDF in the plan — use a builtin "
+        f"or an Arrow-batched pandas UDF"
+    )

@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import pytest
 
+from etl_spark.plans.inspect import executed_plan, formatted_plan, node_count
 from etl_spark.registry import all_specs
 
 SPECS = all_specs()
@@ -25,26 +26,13 @@ def plan_of(spark, sf_dir, name: str) -> str:
     # the lock (x54/x57 regression, r5). Clearing first makes counts
     # order-independent; tools/regen_plan_lock.py does the same.
     spark.catalog.clearCache()
-    df = SPECS[name].fn(spark, sf_dir)
-    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    return df._jdf.queryExecution().explainString(mode)
+    return formatted_plan(SPECS[name].fn(spark, sf_dir))
 
 
 def executed_plan_of(spark, sf_dir, name: str) -> str:
     """Final (post-AQE) physical plan: run the query, then render the
     executed plan — WholeStageCodegen stages only appear here."""
-    df = SPECS[name].fn(spark, sf_dir)
-    df.collect()
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
-def node_count(plan: str, node: str) -> int:
-    """Count physical nodes in formatted-explain output via the
-    numbered detail headers '(N) <node>' (each node appears once in
-    the tree and once in details; details are unambiguous)."""
-    import re
-
-    return len(re.findall(rf"\(\d+\) {node}(?:\n| )", plan))
+    return executed_plan(SPECS[name].fn(spark, sf_dir))
 
 
 def test_filter_pushdown_reaches_scan(spark, sf_dir):

@@ -17,7 +17,6 @@ from __future__ import annotations
 
 import json
 import os
-import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -35,17 +34,13 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 LOCK = os.path.join(os.path.dirname(__file__), "..", "tests", "plan_shapes.json")
 
 
-def node_count(plan: str, node: str) -> int:
-    return len(re.findall(rf"\(\d+\) {node}(?:\n| )", plan))
-
-
 def main() -> None:
+    from etl_spark.plans.inspect import formatted_plan, node_count
     from etl_spark.registry import all_specs
     from etl_spark.session import get_spark
 
     spark = get_spark(app_name="plan-lock")
     spark.sparkContext.setLogLevel("ERROR")
-    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
     out: dict[str, dict[str, int]] = {}
     for name, spec in sorted(all_specs().items()):
         # lock the COLD-cache plan: a materialized cache makes the
@@ -55,8 +50,7 @@ def main() -> None:
         # clears the cache identically, so lock and test always
         # compare the same (cold) shape regardless of test order.
         spark.catalog.clearCache()
-        df = spec.fn(spark, SF_DIR)
-        plan = df._jdf.queryExecution().explainString(mode)
+        plan = formatted_plan(spec.fn(spark, SF_DIR))
         out[name] = {n: node_count(plan, n) for n in NODES}
     with open(LOCK, "w") as fh:
         json.dump(out, fh, indent=1, sort_keys=True)
