@@ -9,9 +9,13 @@ full result to xlsx (:3615-3718) and emails it (:3720-3796), logging
 every check (:1129-1144).
 
 Improvements over the reference, by construction:
-- ONE materialization: the reference fetches all rows even when only
-  the count matters (anti-pattern, SURVEY.md §4.1); here the DataFrame
-  is cached, counted, and only exported when triggered.
+- ONE Spark action per check: the reference fetches all rows even
+  when only the count matters (anti-pattern, SURVEY.md §4.1); here a
+  count-only alert runs one ``count()``, and an exporting alert one
+  ``limit(max_export_rows + 1).toPandas()`` that yields both the count
+  and the report rows — a second action (``count()``) only when the
+  result overflows the export cap. The report is written only when
+  triggered.
 - the notifier is an interface; tests use the collecting impl, prod
   wires SMTP outside the engine (side effects never live inside a
   query plan).
@@ -150,17 +154,25 @@ class AlertEngine:
 
     def check(self, spec: AlertSpec, now: datetime | None = None) -> AlertResult:
         """One alert check (§3.2 lifecycle): run → count → condition →
-        (export + notify) → log. The query result is cached so count
-        and export share one execution."""
+        (export + notify) → log, as one Spark action: ``count()`` with
+        no export path, else one capped ``toPandas`` whose length is
+        the count unless it overflows the cap, when a ``count()``
+        gives the true total. The export holds the first
+        ``max_export_rows`` rows."""
         now = now or datetime.now()
-        df: DataFrame | None = None
         try:
-            df = self.spark.sql(spec.sql).cache()
-            n = df.count()
+            df = self.spark.sql(spec.sql)
+            pdf = None
+            if spec.export_path is None:
+                n = df.count()
+            else:
+                pdf = df.limit(spec.max_export_rows + 1).toPandas()
+                n = len(pdf) if len(pdf) <= spec.max_export_rows else df.count()
             triggered = evaluate_condition(n, spec.condition, spec.threshold)
             export_path = None
             if triggered:
-                export_path = self._export(df, spec)
+                if pdf is not None:
+                    export_path = self._export(pdf.iloc[: spec.max_export_rows], spec)
                 self.notifier.send(
                     subject=f"[alert] {spec.name}",
                     body=(
@@ -172,29 +184,24 @@ class AlertEngine:
             result = AlertResult(spec.alert_id, now, n, triggered, export_path)
         except Exception as ex:  # noqa: BLE001 — checks must not kill the loop
             result = AlertResult(spec.alert_id, now, -1, False, error=str(ex)[:500])
-        finally:
-            if df is not None:
-                df.unpersist()
         self._log(spec, result)
         return result
 
-    def _export(self, df: DataFrame, spec: AlertSpec) -> str | None:
+    def _export(self, pdf, spec: AlertSpec) -> str:
         """S8 report export on trigger (web_scheduler.py:3615-3718's
         role): .xlsx paths get the STYLED workbook (stdlib OOXML
         writer — no engine dependency), anything else a CSV."""
-        if spec.export_path is None:
-            return None
-        from etl_spark.sources.excel import write_excel, write_report_csv
+        from etl_spark.sources.excel import write_excel_frame, write_report_csv_frame
 
         if spec.export_path.endswith(".xlsx"):
-            write_excel(df, spec.export_path, spec.max_export_rows)
+            write_excel_frame(pdf, spec.export_path)
             return spec.export_path
         path = (
             spec.export_path
             if spec.export_path.endswith(".csv")
             else spec.export_path.rsplit(".", 1)[0] + ".csv"
         )
-        write_report_csv(df, path, spec.max_export_rows)
+        write_report_csv_frame(pdf, path)
         return path
 
     def _log(self, spec: AlertSpec, r: AlertResult) -> None:

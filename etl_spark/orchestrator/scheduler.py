@@ -20,16 +20,19 @@ managed Parquet table, and the gate/retry decisions are the SURVEY
 relational layer. `now` is always passed in, so tests never sleep; the
 1-second daemon loop is `run_loop`, a thin wrapper around `tick`.
 
-Scale note: one tick issues exactly ONE small query — a single
-window pass (`tick_snapshot`) yielding latest status, consecutive
-failures, and last execution time per task — regardless of task
-count (under AQE it runs as two jobs: the shuffle stage and the
-result). The reference's per-task N+1 SELECTs (:1327-1369) collapse
-into one set-based query over the whole log table.
+Scale note: the tick's log-derived state — latest status,
+consecutive failures and last execution time per task — is read from
+the log ONCE, by the first tick's `tick_snapshot` (a single window
+pass; under AQE two jobs), and then kept in memory: every later row
+goes through `log_execution`, which applies the query's own rule to
+the memo. Later ticks read nothing, so tick cost no longer grows with
+the `task_logs` file count. The reference's per-task N+1 SELECTs
+(:1327-1369) collapse into that one set-based bootstrap query.
 """
 
 from __future__ import annotations
 
+import threading
 import time as _time
 from collections.abc import Callable
 from dataclasses import dataclass, field
@@ -44,6 +47,10 @@ from etl_spark.sources.writers import append_row
 # T4: monitoring tasks with no schedule at all default to a 5-minute
 # cadence (web_scheduler.py:1483-1494, :1530-1538)
 DEFAULT_MONITOR_INTERVAL_S = 300
+
+# how many recent runs per task the consecutive-failure count looks at
+# (web_scheduler.py:1350-1362); the memo caps its count the same way
+LOOKBACK = 50
 
 LOG_SCHEMA = (
     "task_id INT, task_name STRING, status STRING, execution_time TIMESTAMP_NTZ, "
@@ -74,11 +81,24 @@ class TaskState:
     executing: bool = False
 
 
+Snapshot = dict[int, tuple[str, int, datetime | None]]
+
+
 class Orchestrator:
+    """Scheduling state lives in memory: ``next_run`` and ``executing``
+    per task, and ``_snap``, the log-derived tick state in the
+    `tick_snapshot` shape. This assumes the Orchestrator is the only
+    writer of ``{db}.task_logs``; a restart re-reads the log on its
+    first tick. ``_lock`` makes the T5 check-and-set, the memo update
+    and the tick's memo copy atomic, so a run-now call from another
+    thread cannot race the tick."""
+
     def __init__(self, spark: SparkSession, db: str = "etl_meta"):
         self.spark = spark
         self.db = db
         self.tasks: dict[int, TaskState] = {}
+        self._snap: Snapshot | None = None
+        self._lock = threading.Lock()
         spark.sql(f"CREATE DATABASE IF NOT EXISTS {db}")
         spark.sql(
             f"CREATE TABLE IF NOT EXISTS {db}.task_logs ({LOG_SCHEMA}) USING parquet"
@@ -108,12 +128,26 @@ class Orchestrator:
     def log_execution(
         self, task_id: int, status: str, now: datetime, details: str = ""
     ) -> None:
+        """T10 audit row, then the same row applied to the memo with
+        the rule `tick_snapshot` computes. A row that is not strictly
+        newer than the task's last one (out of order, or a tie the
+        window orders arbitrarily) drops the memo instead, so the next
+        tick re-reads the log."""
         spec = self.tasks[task_id].spec
         append_row(
             self.spark,
             f"{self.db}.task_logs",
             (task_id, spec.name, status, now, details),
         )
+        with self._lock:
+            if self._snap is None:
+                return
+            _, prev, last_t = self._snap.get(task_id, (None, 0, None))
+            if last_t is not None and now <= last_t:
+                self._snap = None
+                return
+            consec = min(prev + 1, LOOKBACK) if status == "failed" else 0
+            self._snap[task_id] = (status, consec, now)
 
     def logs(self):
         return self.spark.table(f"{self.db}.task_logs")
@@ -133,7 +167,7 @@ class Orchestrator:
         )
         return {r.task_id: r.status for r in rows}
 
-    def consecutive_failures(self, task_id: int, lookback: int = 50) -> int:
+    def consecutive_failures(self, task_id: int, lookback: int = LOOKBACK) -> int:
         """A2: count of 'failed' runs since the last success
         (web_scheduler.py:1350-1362 counts failures within the last N
         ordered by recency)."""
@@ -156,17 +190,14 @@ class Orchestrator:
             n += 1
         return n
 
-    def tick_snapshot(
-        self, lookback: int = 50
-    ) -> dict[int, tuple[str, int, datetime | None]]:
+    def tick_snapshot(self, lookback: int = LOOKBACK) -> Snapshot:
         """The tick's ENTIRE log-derived state in one window query —
         {task_id: (latest_status, consecutive_failures,
         last_execution_time)}. Latest status is the rn=1 row;
         consecutive failures = (first non-failed rn) - 1, or the full
-        lookback depth when every recent run failed. One query per
-        tick regardless of task count (the r1 version re-ran a
-        per-task consecutive_failures job for each retry-eligible
-        task)."""
+        lookback depth when every recent run failed. One query for all
+        tasks; `tick` runs it once to fill the memo that
+        `log_execution` keeps current."""
         w = Window.partitionBy("task_id").orderBy(F.desc("execution_time"))
         rows = (
             self.logs()
@@ -210,9 +241,10 @@ class Orchestrator:
         """T9 run-now + T5 in-flight dedup + T10 logging. Returns the
         terminal status ('success' | 'failed' | 'skipped')."""
         state = self.tasks[task_id]
-        if state.executing:
-            return "skipped"  # T5 (web_scheduler.py:1310-1316)
-        state.executing = True
+        with self._lock:
+            if state.executing:
+                return "skipped"  # T5 (web_scheduler.py:1310-1316)
+            state.executing = True
         try:
             state.spec.fn(self.spark)
         except Exception as ex:  # noqa: BLE001 — task errors become log rows
@@ -228,7 +260,12 @@ class Orchestrator:
         """One scheduler pass (the :1289-1582 loop body). Returns
         {task_id: outcome} for every task acted on this tick."""
         outcomes: dict[int, str] = {}
-        snap = self.tick_snapshot()
+        with self._lock:
+            if self._snap is None:
+                self._snap = self.tick_snapshot()
+            # decide from the tick-start state: a task run earlier in
+            # this tick unblocks its dependents only on the next tick
+            snap = dict(self._snap)
         latest = {tid: s[0] for tid, s in snap.items()}
         for tid, state in self.tasks.items():
             spec = state.spec

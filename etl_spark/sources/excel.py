@@ -54,15 +54,21 @@ def read_excel(
 
 def write_excel(df: DataFrame, path: str, max_rows: int = 1_048_576) -> int:
     """S8 Excel report sink (result rows → STYLED .xlsx,
-    web_scheduler.py:3615-3718): content-sized column widths, date
-    number_format on datetime cells, multi-pattern re-parse of text
-    dates, bold header — via the stdlib OOXML writer
+    web_scheduler.py:3615-3718). Collects via Arrow `toPandas` — the
+    row clamp guards the driver; reports are human-scale by
+    definition — then writes with `write_excel_frame`. Returns rows
+    written."""
+    return write_excel_frame(df.limit(max_rows).toPandas(), path)
+
+
+def write_excel_frame(pdf, path: str) -> int:
+    """A pandas frame → STYLED .xlsx: content-sized column widths,
+    date number_format on datetime cells, multi-pattern re-parse of
+    text dates, bold header — via the stdlib OOXML writer
     (`etl_spark.sources.xlsx_writer`), so no openpyxl dependency.
-    Collects via Arrow `toPandas` — the row clamp guards the driver;
-    reports are human-scale by definition. Returns rows written."""
+    Returns rows written."""
     from etl_spark.sources.xlsx_writer import write_xlsx
 
-    pdf = df.limit(max_rows).toPandas()
     rows = [
         [None if _is_na(v) else v for v in rec]
         for rec in pdf.itertuples(index=False, name=None)
@@ -79,7 +85,12 @@ def _is_na(v: object) -> bool:
 def write_report_csv(df: DataFrame, path: str, max_rows: int = 1_048_576) -> int:
     """xlsx-free report fallback with the same contract as
     `write_excel` (driver-side, clamped). One file, header row."""
-    pdf = df.limit(max_rows).toPandas()
+    return write_report_csv_frame(df.limit(max_rows).toPandas(), path)
+
+
+def write_report_csv_frame(pdf, path: str) -> int:
+    """A pandas frame → one CSV file with a header row. Returns rows
+    written."""
     pdf.to_csv(path, index=False)
     return len(pdf)
 

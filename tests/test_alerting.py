@@ -182,3 +182,52 @@ def test_check_profile_drift_notifies_on_breach_only(spark):
     assert got == 1 and len(n.sent) == 1
     assert "v.completeness" in n.sent[0]["body"]
     assert "mean" not in n.sent[0]["body"]
+
+
+def test_check_never_caches(engine, spark, tmp_path, monkeypatch):
+    """An alert check is one Spark action on the query itself: nothing
+    is cached or persisted, with or without an export."""
+    spark.sql("SELECT id FROM range(4)").createOrReplaceTempView("mon_nocache")
+    cls = type(spark.sql("SELECT 1"))
+    calls = []
+    for name in ("cache", "persist"):
+        monkeypatch.setattr(cls, name, lambda self, *a, _n=name, **k: calls.append(_n))
+    for export in (None, str(tmp_path / "r.csv"), str(tmp_path / "r.xlsx")):
+        r = engine.check(
+            AlertSpec(
+                alert_id=5,
+                name="no cache",
+                sql="SELECT id FROM mon_nocache",
+                export_path=export,
+            )
+        )
+        assert r.error is None and r.triggered and r.n_rows == 4
+    assert calls == []
+
+
+@pytest.mark.parametrize("suffix", [".csv", ".xlsx"])
+def test_export_overflow_counts_all_exports_cap(engine, spark, tmp_path, suffix):
+    """A result larger than max_export_rows reports its true row count
+    and exports exactly the first max_export_rows rows."""
+    import zipfile
+
+    out = str(tmp_path / f"overflow{suffix}")
+    r = engine.check(
+        AlertSpec(
+            alert_id=6,
+            name="overflow",
+            sql="SELECT id, concat('row ', id) AS label FROM range(5) ORDER BY id",
+            condition="rows_gt",
+            threshold=4,
+            export_path=out,
+            max_export_rows=3,
+        )
+    )
+    assert r.error is None and r.triggered and r.n_rows == 5 and r.export_path == out
+    if suffix == ".csv":
+        with open(out) as fh:
+            assert fh.read().splitlines() == ["id,label", "0,row 0", "1,row 1", "2,row 2"]
+    else:
+        with zipfile.ZipFile(out) as z:
+            assert z.read("xl/worksheets/sheet1.xml").count(b"<row ") - 1 == 3
+    assert "5 rows" in engine.notifier.sent[0]["body"]

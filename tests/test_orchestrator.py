@@ -3,12 +3,17 @@ dependency semantics (injected clock, Spark metadata tables)."""
 
 from __future__ import annotations
 
-from datetime import datetime
+import random
+import sys
+import threading
+import time
+from datetime import datetime, timedelta
 
 import pytest
 
 from etl_spark.orchestrator import Orchestrator, TaskSpec, next_fire
 from etl_spark.orchestrator.cron import CronError
+from etl_spark.orchestrator.scheduler import LOOKBACK
 
 
 # --- cron (no Spark) -------------------------------------------------------
@@ -286,3 +291,134 @@ def test_cron_leap_day():
     # Feb 29 only exists in leap years: from mid-2024 (leap), the next
     # Feb 29 fire is 2028
     assert next_fire("0 0 29 2 *", T0) == datetime(2028, 2, 29, 0, 0)
+
+
+# --- in-memory tick state (the memo `log_execution` keeps current) --------
+
+
+def test_memo_matches_log_query(orch):
+    """After every row and a tick, the memo equals a fresh
+    `tick_snapshot()`: random rows in time order, a repeated time, a
+    row back in time, and a failure streak longer than LOOKBACK."""
+    t = datetime(2024, 3, 1, 8, 0)
+    for tid in (1, 2, 3):
+        orch.register(_spec(tid, lambda s: None), t)  # never due, no retry
+    rng = random.Random(20240301)
+    rows = []
+    for _ in range(12):
+        t += timedelta(seconds=rng.randint(1, 90))
+        rows.append((rng.choice((1, 2, 3)), rng.choice(("success", "failed", "timeout")), t))
+    rows.append((1, "failed", t))  # ties the previous row's time
+    rows.append((1, "failed", t))  # and again, for the same task
+    rows.append((2, "success", t - timedelta(hours=1)))  # back in time
+    for _ in range(LOOKBACK + 5):
+        t += timedelta(seconds=1)
+        rows.append((3, "failed", t))
+    rows.append((3, "success", t + timedelta(seconds=1)))
+
+    orch.tick(t)  # fills the memo from the (empty) log
+    for tid, status, now in rows:
+        stale = orch._snap.get(tid, (None, 0, None))[2]
+        orch.log_execution(tid, status, now)
+        if stale is not None and now <= stale:
+            assert orch._snap is None  # re-read on the next tick
+        orch.tick(now)
+        assert orch._snap == orch.tick_snapshot()
+    assert orch._snap[3] == ("success", 0, t + timedelta(seconds=1))
+
+
+def test_later_ticks_issue_no_spark_job(orch, monkeypatch):
+    """The log is read by the first tick only; later ticks decide from
+    the memo even while tasks run and log rows."""
+    now = datetime(2024, 6, 15, 12, 0)
+    orch.register(_spec(1, lambda s: 1 / 0, interval_seconds=60, max_retries=5), now)
+    orch.register(_spec(2, lambda s: None, interval_seconds=60), now)
+    orch.register(_spec(3, lambda s: None, interval_seconds=60, dependencies=[2]), now)
+    orch.run_task(1, now - timedelta(seconds=30))
+
+    cls = type(orch.logs())
+    calls = []
+    real_collect = cls.collect
+
+    def counting_collect(self):
+        calls.append(1)
+        return real_collect(self)
+
+    monkeypatch.setattr(cls, "collect", counting_collect)
+    assert orch.tick(now) == {1: "failed"}  # retry, from the first read
+    assert orch.tick(now + timedelta(minutes=1)) == {
+        1: "failed",
+        2: "success",
+        3: "blocked",
+    }
+    assert orch.tick(now + timedelta(minutes=2)) == {
+        1: "failed",
+        2: "success",
+        3: "success",
+    }
+    assert len(calls) == 1, f"three ticks ran {len(calls)} collect jobs, expected 1"
+    monkeypatch.undo()
+    assert orch._snap == orch.tick_snapshot()
+
+
+def test_retry_decision_survives_restart(spark, orch):
+    """`test_failure_retry_then_give_up` split across a restart: the
+    new Orchestrator re-reads the log and makes the same decisions."""
+
+    def flaky(s):
+        raise RuntimeError("boom")
+
+    spec = _spec(4, flaky, interval_seconds=3600, max_retries=2, retry_delay_seconds=60)
+    orch.register(spec, datetime(2024, 1, 1, 0, 0, 0))
+    assert orch.tick(datetime(2024, 1, 1, 1, 0, 0)) == {4: "failed"}
+    assert orch.tick(datetime(2024, 1, 1, 1, 1, 0)) == {4: "failed"}
+
+    restarted = Orchestrator(spark, db=orch.db)
+    restarted.register(spec, datetime(2024, 1, 1, 1, 1, 30))
+    assert restarted.tick(datetime(2024, 1, 1, 1, 1, 45)) == {}  # retry_delay
+    assert restarted.tick(datetime(2024, 1, 1, 1, 2, 0)) == {4: "failed"}
+    assert restarted.tick(datetime(2024, 1, 1, 1, 3, 0)) == {}
+    assert restarted.consecutive_failures(4) == 3
+
+
+def test_inflight_dedup_across_threads(orch):
+    """T5 across threads: while one thread's run is inside its task,
+    every concurrent run-now call on other threads is skipped, so the
+    task runs and logs exactly once. More threads than cores and a
+    short switch interval give a check-then-set race its chance."""
+    now = datetime(2024, 1, 1, 0, 0, 0)
+    release = threading.Event()
+    entered = []
+
+    def blocking(s):
+        entered.append(threading.get_ident())
+        if not release.wait(60):
+            raise TimeoutError("never released")
+
+    orch.register(_spec(30, blocking, interval_seconds=3600), now)
+    n = 8
+    barrier = threading.Barrier(n)
+    outcomes = []
+
+    def run():
+        barrier.wait(60)
+        outcomes.append(orch.run_task(30, now))
+
+    threads = [threading.Thread(target=run) for _ in range(n)]
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in threads:
+            t.start()
+        deadline = time.monotonic() + 30
+        while len(outcomes) < n - 1 and time.monotonic() < deadline:
+            time.sleep(0.01)
+        assert outcomes == ["skipped"] * (n - 1) and len(entered) == 1
+    finally:
+        sys.setswitchinterval(switch)
+        release.set()
+        for t in threads:
+            t.join(60)
+    assert not any(t.is_alive() for t in threads)
+    assert sorted(outcomes) == ["skipped"] * (n - 1) + ["success"]
+    assert orch.logs().count() == 1
