@@ -206,7 +206,8 @@ class AlertEngine:
 
     def _log(self, spec: AlertSpec, r: AlertResult) -> None:
         """T10 alert audit log (log_sql_alert_execution,
-        web_scheduler.py:1129-1144)."""
+        web_scheduler.py:1129-1144); inside an ``Orchestrator`` tick the
+        row commits with the tick's other rows."""
         append_row(
             self.spark,
             f"{self.db}.alert_logs",

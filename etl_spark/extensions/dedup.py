@@ -626,7 +626,7 @@ def connected_components(
       latency, not data, dominated the loop (0.45–0.9 s/round on
       ~10.7k pairs, 8c/32c ratio 0.34). The upstream pair pipeline
       still materializes under the caller's session and AQE (the
-      count job below), and the labels are rebound to it.
+      pairs checkpoint below), and the labels are rebound to it.
     - the convergence label-sum rides the round's own materializing
       action as an ``observe()`` metric over a noop sink (guide
       §1.4) instead of a separate aggregate subtree — one job per
@@ -662,53 +662,28 @@ def connected_components(
         round_cache.append(df.persist())
         return df.checkpoint(eager=False)
 
-    # All four (src, dst) orientations INCLUDING self-loops from ONE
-    # pass over pairs (an explode; a union of pairs with its own
-    # reversal would evaluate the upstream pair pipeline twice before
-    # the persist). The self-loops make every vertex its own neighbor,
-    # so each round's new label is simply MIN over incoming neighbor
-    # labels — the "keep my own label" term that previously needed a
-    # second (left) join per round now rides the same groupBy
-    # (r15 optimization, guide §2.4: one join + one aggregation per
-    # round instead of join + aggregation + join; measured 15% off the
-    # loop at identical labels and round count). Self-loops repeat per
-    # pair occurrence of a vertex; MIN is insensitive to duplicates,
-    # so no distinct is paid.
-    edges_raw = (
-        pairs.select(
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-                    ),
-                    F.struct(
-                        F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")
-                    ),
-                    F.struct(
-                        F.col("doc_a").alias("src"), F.col("doc_a").alias("dst")
-                    ),
-                    F.struct(
-                        F.col("doc_b").alias("src"), F.col("doc_b").alias("dst")
-                    ),
-                )
-            ).alias("e")
-        )
-        .select("e.src", "e.dst")
-        .persist()
-    )
     prior_dir = None
+    pairs_ck = None
     edges = None
     try:
         if checkpoint_dir is not None:
             prior_ckpt_dir = sc._jsc.sc().getCheckpointDir()  # scala Option
             prior_dir = prior_ckpt_dir.get() if prior_ckpt_dir.isDefined() else None
             sc.setCheckpointDir(checkpoint_dir)
-        # Materialize the edge cache under the CALLER's confs (the pair
-        # pipeline upstream wants AQE's broadcast/skew handling) and
-        # size the loop's partitioning from the measured count —
-        # scale-adaptive by construction: 1 fat partition at fixture
-        # scale, ~edge-bytes / 64 MB partitions at cluster scale.
-        n_edges = edges_raw.count()
+        # Materialize the PAIRS under the CALLER's confs: the pair
+        # pipeline upstream wants AQE's broadcast/skew handling, and a
+        # checkpoint (unlike a persist, whose final stage AQE may not
+        # coalesce) keeps AQE's coalesced partition count, so the loop
+        # below reads a handful of partitions, not shuffle.partitions.
+        # The count sizes the loop's partitioning — scale-adaptive by
+        # construction: 1 fat partition at fixture scale, ~edge-bytes /
+        # 64 MB partitions at cluster scale. Each pair explodes into
+        # exactly 4 edges.
+        if checkpoint_dir is None:
+            pairs_ck = pairs.localCheckpoint(eager=True)
+        else:
+            pairs_ck = pairs.checkpoint(eager=True)
+        n_edges = 4 * pairs_ck.count()
         n_parts = max(
             1, -(-(n_edges * _CC_EDGE_BYTES) // _CC_TARGET_PART_BYTES)
         )
@@ -719,10 +694,37 @@ def connected_components(
                 "spark.sql.shuffle.partitions": str(n_parts),
             },
         )
-        # loop-invariant hoist (guide §2.4): partition edges by the
+        # All four (src, dst) orientations INCLUDING self-loops from ONE
+        # pass over pairs (an explode; a union of pairs with its own
+        # reversal would read the pairs twice). The self-loops make every
+        # vertex its own neighbor, so each round's new label is simply
+        # MIN over incoming neighbor labels — the "keep my own label"
+        # term that previously needed a second (left) join per round now
+        # rides the same groupBy (r15 optimization, guide §2.4: one join
+        # + one aggregation per round instead of join + aggregation +
+        # join; measured 15% off the loop at identical labels and round
+        # count). Self-loops repeat per pair occurrence of a vertex; MIN
+        # is insensitive to duplicates, so no distinct is paid.
+        # Loop-invariant hoist (guide §2.4): partition edges by the
         # join key ONCE; every round then reuses the cached layout
-        # instead of re-shuffling the edge list per round
-        edges = rebind(edges_raw, loop).repartition(n_parts, "dst").persist()
+        # instead of re-shuffling the edge list per round.
+        a, b = F.col("doc_a"), F.col("doc_b")
+        edges = (
+            rebind(pairs_ck, loop)
+            .select(
+                F.explode(
+                    F.array(
+                        F.struct(a.alias("src"), b.alias("dst")),
+                        F.struct(b.alias("src"), a.alias("dst")),
+                        F.struct(a.alias("src"), a.alias("dst")),
+                        F.struct(b.alias("src"), b.alias("dst")),
+                    )
+                ).alias("e")
+            )
+            .select("e.src", "e.dst")
+            .repartition(n_parts, "dst")
+            .persist()
+        )
 
         def _round(df: DataFrame):
             """Materialize one round (checkpoint-backed) and return
@@ -748,7 +750,7 @@ def connected_components(
             edges.groupBy(F.col("src").alias("doc_id"))
             .agg(F.min("dst").alias("lbl"))
         )
-        edges_raw.unpersist()  # superseded by the dst-partitioned cache
+        _release(pairs_ck)  # superseded by the dst-partitioned cache
         for _ in range(MAX_CC_ITERS):
             # build the per-partition hash table on the (smaller)
             # label side; the co-partitioned layout means neither side
@@ -769,7 +771,8 @@ def connected_components(
             _release(df)
         raise
     finally:
-        edges_raw.unpersist()  # no-op if already unpersisted above
+        if pairs_ck is not None:
+            _release(pairs_ck)  # no-op if already released above
         if edges is not None:
             edges.unpersist()
         # setCheckpointDir mutates global SparkContext state; put back

@@ -12,7 +12,8 @@ Semantics reproduced (SURVEY.md §2.10):
 - T7 dependency gating — run only if every dependency's LATEST run
   succeeded (:1231-1286)
 - T9 run-now manual trigger (:4994-5072)
-- T10 audit logging of every run (:1099-1115)
+- T10 audit logging of every run (:1099-1115), one row per run; a
+  tick commits its rows together (below)
 
 The metadata store is the engine itself: `task_logs` is an append-only
 managed Parquet table, and the gate/retry decisions are the SURVEY
@@ -28,6 +29,15 @@ goes through `log_execution`, which applies the query's own rule to
 the memo. Later ticks read nothing, so tick cost no longer grows with
 the `task_logs` file count. The reference's per-task N+1 SELECTs
 (:1327-1369) collapse into that one set-based bootstrap query.
+
+Audit commit (T10): the reference INSERTs each run's row as it ends.
+Here the tick is the unit of commit: inside `tick`, `log_execution`
+and every `AlertEngine.check` a task runs buffer their rows
+(`writers.deferred_appends`), and when the tick ends `task_logs` and
+`alert_logs` each get ONE multi-row INSERT — one write job and one
+file per table per tick instead of one per row. The rows, their order
+and every decision are the same; the memo takes each row as it is
+buffered. Crash semantics are on `Orchestrator`.
 """
 
 from __future__ import annotations
@@ -42,7 +52,7 @@ from pyspark.sql import SparkSession, Window
 from pyspark.sql import functions as F
 
 from etl_spark.orchestrator.cron import CronError, next_fire
-from etl_spark.sources.writers import append_row
+from etl_spark.sources.writers import append_row, deferred_appends
 
 # T4: monitoring tasks with no schedule at all default to a 5-minute
 # cadence (web_scheduler.py:1483-1494, :1530-1538)
@@ -91,7 +101,21 @@ class Orchestrator:
     writer of ``{db}.task_logs``; a restart re-reads the log on its
     first tick. ``_lock`` makes the T5 check-and-set, the memo update
     and the tick's memo copy atomic, so a run-now call from another
-    thread cannot race the tick."""
+    thread cannot race the tick.
+
+    Crash semantics of the tick's group commit:
+
+    - ``tick()`` returns only after every row it logged is committed;
+      if a table's INSERT fails, the other table's is still made,
+      ``tick`` drops the memo (the next tick re-reads the log) and
+      re-raises.
+    - A process crash mid-tick loses that tick's rows, and only those.
+    - On restart the crashed tick's runs look unlogged — already the
+      outcome of a crash during a task, or between its end and its
+      INSERT; only that window is wider.
+    - Rows logged outside a tick commit before the call returns: a
+      run-now from another thread, a standalone ``AlertEngine.check``,
+      a direct ``log_execution``."""
 
     def __init__(self, spark: SparkSession, db: str = "etl_meta"):
         self.spark = spark
@@ -128,7 +152,8 @@ class Orchestrator:
     def log_execution(
         self, task_id: int, status: str, now: datetime, details: str = ""
     ) -> None:
-        """T10 audit row, then the same row applied to the memo with
+        """T10 audit row (buffered until the end of a tick on the
+        tick's thread), then the same row applied to the memo with
         the rule `tick_snapshot` computes. A row that is not strictly
         newer than the task's last one (out of order, or a tie the
         window orders arbitrarily) drops the memo instead, so the next
@@ -258,14 +283,26 @@ class Orchestrator:
 
     def tick(self, now: datetime) -> dict[int, str]:
         """One scheduler pass (the :1289-1582 loop body). Returns
-        {task_id: outcome} for every task acted on this tick."""
-        outcomes: dict[int, str] = {}
+        {task_id: outcome} for every task acted on this tick, once
+        every audit row the tick logged is committed."""
         with self._lock:
             if self._snap is None:
                 self._snap = self.tick_snapshot()
             # decide from the tick-start state: a task run earlier in
             # this tick unblocks its dependents only on the next tick
             snap = dict(self._snap)
+        try:
+            with deferred_appends(self.spark):
+                return self._run_due(snap, now)
+        except BaseException:
+            # the memo may hold rows whose INSERT failed
+            with self._lock:
+                self._snap = None
+            raise
+
+    def _run_due(self, snap: Snapshot, now: datetime) -> dict[int, str]:
+        """The tick's decisions from its start-of-tick ``snap``."""
+        outcomes: dict[int, str] = {}
         latest = {tid: s[0] for tid, s in snap.items()}
         for tid, state in self.tasks.items():
             spec = state.spec

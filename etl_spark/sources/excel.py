@@ -129,10 +129,11 @@ def normalize_columns(df: DataFrame) -> DataFrame:
     """Sanitize header-derived column names the way the reference's
     filename sanitizer strips illegal chars (web_scheduler.py:3637):
     trim, replace spaces/illegal identifier chars with '_', lowercase.
-    Excel headers are user text; parquet columns must be identifiers."""
-    out = df
-    for c in df.columns:
-        clean = "".join(ch if ch.isalnum() else "_" for ch in c.strip()).strip("_").lower()
-        if clean != c:
-            out = out.withColumnRenamed(c, clean or "col")
-    return out
+    Excel headers are user text; parquet columns must be identifiers.
+    One ``toDF`` renames every column in one plan step."""
+
+    def clean(c: str) -> str:
+        out = "".join(ch if ch.isalnum() else "_" for ch in c.strip()).strip("_").lower()
+        return c if out == c else out or "col"
+
+    return df.toDF(*(clean(c) for c in df.columns))

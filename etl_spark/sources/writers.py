@@ -26,8 +26,10 @@ the same catalog.
 from __future__ import annotations
 
 import contextlib
-from collections.abc import Callable
+import threading
+from collections.abc import Callable, Iterator
 
+from pyspark import InheritableThread
 from pyspark.sql import DataFrame, SparkSession
 
 
@@ -66,26 +68,96 @@ def append_row(spark: SparkSession, table: str, values: tuple) -> None:
     the reference's per-event audit `INSERT INTO ... VALUES`
     (web_scheduler.py:1099-1115, :1129-1144).
 
+    Inside ``deferred_appends`` on this thread the row is buffered and
+    committed with the others when the context exits; otherwise it is
+    written before the call returns. Both are `_insert_rows`, the
+    single-row write being its one-row case."""
+    buffered = getattr(_deferred, "rows", None)
+    if buffered is None:
+        _insert_rows(spark, table, [values])
+    else:
+        buffered.setdefault(table, []).append(values)
+
+
+def _insert_rows(spark: SparkSession, table: str, rows: list[tuple]) -> None:
+    """One parameterized ``INSERT … SELECT FROM VALUES`` of ``rows``.
+
     An inline VALUES list is a driver-side LocalRelation, so the
-    insert is one single-task write job and one file;
-    ``createDataFrame([row]).write.insertInto`` goes through a Python
-    list → RDD conversion and leaves two files per row, at ~0.5 s a row.
-    Every value is a bound parameter, never SQL text, so error messages
-    with quotes, semicolons or ``:name`` land verbatim. Naive
-    ``datetime`` values are bound as text and cast to TIMESTAMP_NTZ: a
-    bound Python datetime is a session-time-zone TIMESTAMP and would
-    land shifted by the session offset."""
+    insert is one write job; the COALESCE(1) hint makes it one task and
+    one file however many rows (a bare VALUES list writes a file per
+    row). ``createDataFrame(rows).write.insertInto`` goes through a
+    Python list → RDD conversion and leaves two files per row, at
+    ~0.5 s a row. Every value is a bound parameter, never SQL text, so
+    error messages with quotes, semicolons or ``:name`` land verbatim.
+    Naive ``datetime`` values are bound as text and cast to
+    TIMESTAMP_NTZ: a bound Python datetime is a session-time-zone
+    TIMESTAMP and would land shifted by the session offset."""
     import datetime as _dt
 
-    slots, args = [], {}
-    for i, v in enumerate(values):
-        if isinstance(v, _dt.datetime):
-            slots.append(f"CAST(:p{i} AS TIMESTAMP_NTZ)")
-            v = v.isoformat(sep=" ")
-        else:
-            slots.append(f":p{i}")
-        args[f"p{i}"] = v
-    spark.sql(f"INSERT INTO {table} VALUES ({', '.join(slots)})", args=args)
+    tuples, args = [], {}
+    for r, values in enumerate(rows):
+        slots = []
+        for i, v in enumerate(values):
+            name = f"p{r}_{i}"
+            if isinstance(v, _dt.datetime):
+                slots.append(f"CAST(:{name} AS TIMESTAMP_NTZ)")
+                v = v.isoformat(sep=" ")
+            else:
+                slots.append(f":{name}")
+            args[name] = v
+        tuples.append(f"({', '.join(slots)})")
+    spark.sql(
+        f"INSERT INTO {table} SELECT /*+ COALESCE(1) */ * FROM VALUES {', '.join(tuples)}",
+        args=args,
+    )
+
+
+_deferred = threading.local()
+
+
+@contextlib.contextmanager
+def deferred_appends(spark: SparkSession) -> Iterator[None]:
+    """Group commit for ``append_row``: every row appended on this
+    thread inside the context is buffered, and on exit each table gets
+    one ``_insert_rows`` of its rows in append order, through ``spark``
+    (the values bind the same in any session) — one job and one file
+    per table instead of one per row. A nested use joins the outer
+    buffer. The flush runs even when the body raises; the tables flush
+    concurrently on ``InheritableThread``s, which carry this thread's
+    job group, every one is attempted, and the first table's error is
+    re-raised. Rows are committed only when the context exits: a
+    process that dies inside it loses them."""
+    if getattr(_deferred, "rows", None) is not None:
+        yield
+        return
+    _deferred.rows = buffered = {}
+    try:
+        yield
+    finally:
+        _deferred.rows = None
+        _flush(spark, buffered)
+
+
+def _flush(spark: SparkSession, buffered: dict[str, list[tuple]]) -> None:
+    errors: dict[str, BaseException] = {}
+
+    def insert(table: str) -> None:
+        try:
+            _insert_rows(spark, table, buffered[table])
+        except BaseException as ex:  # noqa: BLE001 — re-raised below
+            errors[table] = ex
+
+    tables = list(buffered)
+    threads = [InheritableThread(insert, args=(t,), session=spark) for t in tables[1:]]
+    for th in threads:
+        th.start()
+    for table in tables[:1]:  # the first table flushes on this thread
+        insert(table)
+    for th in threads:
+        th.join()
+    for table in tables:
+        if table in errors:
+            raise errors[table]
 
 
 def append_evolve(df: DataFrame, table: str) -> list[str]:

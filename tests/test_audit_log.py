@@ -1,10 +1,11 @@
 """Audit-log round trips: task runs (`task_logs`) and alert checks
-(`alert_logs`) are single-row parameterized INSERTs, so timestamps
-and free text must read back exactly as written."""
+(`alert_logs`) are parameterized INSERTs — one row outside a tick,
+all of a tick's rows per table inside one — so timestamps and free
+text must read back exactly as written."""
 
 from __future__ import annotations
 
-from datetime import datetime
+from datetime import datetime, timedelta
 
 import pytest
 
@@ -75,3 +76,39 @@ def test_details_text_round_trips_verbatim(meta):
         False,
         TRICKY,
     )
+
+
+def test_tick_batch_round_trips_verbatim(meta):
+    """The same values through a tick's multi-row INSERTs: three task
+    rows and two alert rows, two of them carrying the tricky text."""
+    orch, alerts = meta
+    later = NOW.replace(microsecond=999999)
+
+    def boom(_spark):
+        raise RuntimeError(TRICKY)
+
+    class FailingNotifier:
+        def send(self, subject, body, attachment=None):
+            raise RuntimeError(TRICKY)
+
+    def checks(_spark):
+        alerts.check(AlertSpec(alert_id=3, name="a3", sql="SELECT 1 AS a"), now=NOW)
+        alerts.check(
+            AlertSpec(alert_id=4, name="a4", sql="SELECT 1 AS a WHERE false"), now=later
+        )
+
+    alerts.notifier = FailingNotifier()
+    start = NOW - timedelta(minutes=1)
+    for tid, fn in ((3, boom), (4, checks), (5, lambda s: None)):
+        orch.register(TaskSpec(task_id=tid, name=f"t{tid}", fn=fn, interval_seconds=60), start)
+    assert orch.tick(NOW) == {3: "failed", 4: "success", 5: "success"}
+
+    assert [tuple(r) for r in orch.logs().orderBy("task_id").collect()] == [
+        (3, "t3", "failed", NOW, TRICKY),
+        (4, "t4", "success", NOW, ""),
+        (5, "t5", "success", NOW, ""),
+    ]
+    assert [tuple(r) for r in alerts.alert_logs().orderBy("alert_id").collect()] == [
+        (3, "a3", NOW, -1, False, TRICKY),
+        (4, "a4", later, 0, False, ""),
+    ]

@@ -17,7 +17,7 @@ from etl_spark.sources import (
     upsert,
 )
 from etl_spark.sources.excel import normalize_columns, read_excel, write_report_csv
-from etl_spark.sources.writers import delete_where, update_set
+from etl_spark.sources.writers import append_row, deferred_appends, delete_where, update_set
 from etl_spark import catalog as cat
 
 
@@ -132,6 +132,62 @@ def test_normalize_columns(spark):
     df = spark.createDataFrame([Row(**{"Order Number": 1, "总价/Total": 2.0})])
     out = normalize_columns(df)
     assert out.columns == ["order_number", "总价_total"]
+
+
+def _renamed_one_by_one(df):
+    """The rename loop ``normalize_columns`` replaced: one
+    ``withColumnRenamed`` per header whose clean name differs."""
+    out = df
+    for c in df.columns:
+        clean = "".join(ch if ch.isalnum() else "_" for ch in c.strip()).strip("_").lower()
+        if clean != c:
+            out = out.withColumnRenamed(c, clean or "col")
+    return out
+
+
+def _shopify_headers() -> list[str]:
+    import importlib.util
+    import os
+
+    path = os.path.join(os.path.dirname(os.path.dirname(__file__)), "perfbench", "datagen.py")
+    spec = importlib.util.spec_from_file_location("perfbench_datagen", path)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return list(mod.ORDER_HEADERS)
+
+
+@pytest.mark.parametrize(
+    "headers",
+    [
+        _shopify_headers(),
+        ["Order Number", "order_number"],  # both clean to order_number
+        ["a b", "A_B", "x"],  # a later rename matches an earlier result
+        ["--", "COL", " Taxes Included "],  # empty clean name → col
+    ],
+    ids=["shopify", "collision", "case_collision", "fallback"],
+)
+def test_normalize_columns_matches_rename_loop(spark, headers):
+    df = spark.range(1).select(*(F.lit(i).alias(h) for i, h in enumerate(headers)))
+    assert normalize_columns(df).columns == _renamed_one_by_one(df).columns
+
+
+def test_deferred_appends_nested_commit_once(spark, db):
+    """Rows appended inside a nested ``deferred_appends`` join the outer
+    buffer: nothing is visible until the outer context exits, then each
+    table holds one file with its rows in append order."""
+    for t in ("a", "b"):
+        spark.sql(f"CREATE TABLE {db}.{t} (k INT, v STRING) USING parquet")
+    with deferred_appends(spark):
+        append_row(spark, f"{db}.a", (1, "x"))
+        with deferred_appends(spark):
+            append_row(spark, f"{db}.b", (2, None))
+            append_row(spark, f"{db}.a", (3, "z"))
+        assert spark.table(f"{db}.a").count() == spark.table(f"{db}.b").count() == 0
+    append_row(spark, f"{db}.b", (4, "w"))  # outside: written at once
+    (a_file,) = spark.table(f"{db}.a").inputFiles()
+    assert [tuple(r) for r in spark.read.parquet(a_file).collect()] == [(1, "x"), (3, "z")]
+    assert len(spark.table(f"{db}.b").inputFiles()) == 2
+    assert sorted(map(tuple, spark.table(f"{db}.b").collect())) == [(2, None), (4, "w")]
 
 
 def test_catalog_resolution(spark, db):

@@ -422,3 +422,145 @@ def test_inflight_dedup_across_threads(orch):
     assert not any(t.is_alive() for t in threads)
     assert sorted(outcomes) == ["skipped"] * (n - 1) + ["success"]
     assert orch.logs().count() == 1
+
+
+# --- group commit: a tick's audit rows land as one INSERT per table --------
+
+
+def _new_files(spark, table: str, before: set[str]) -> list[str]:
+    return sorted(set(spark.table(table).inputFiles()) - before)
+
+
+def _file_rows(spark, table: str, path: str) -> list[tuple]:
+    """A file's rows in file order."""
+    schema = spark.table(table).schema
+    return [tuple(r) for r in spark.read.schema(schema).parquet(path).collect()]
+
+
+def _alerting_task(engine, at: datetime):
+    from etl_spark.alerting import AlertSpec
+
+    def run(_spark):
+        engine.check(AlertSpec(1, "always", "SELECT 1 AS a"), now=at)
+        engine.check(AlertSpec(2, "never", "SELECT 1 AS a WHERE false"), now=at)
+
+    return run
+
+
+def test_tick_commits_one_file_per_log_table(spark, orch):
+    """Three tasks, one of which raises and one of which runs two alert
+    checks: each log table gains exactly one file, holding the tick's
+    rows in log order, the failed run's row with the rest."""
+    from etl_spark.alerting import AlertEngine
+
+    t0 = datetime(2024, 6, 15, 12, 0)
+    now = t0 + timedelta(minutes=1, microseconds=250)
+    engine = AlertEngine(spark, db=orch.db)
+    orch.register(_spec(1, _alerting_task(engine, now), interval_seconds=60), t0)
+    orch.register(_spec(2, lambda s: 1 / 0, interval_seconds=60), t0)
+    orch.register(_spec(3, lambda s: None, interval_seconds=60), t0)
+    tables = (f"{orch.db}.task_logs", f"{orch.db}.alert_logs")
+    before = {t: set(spark.table(t).inputFiles()) for t in tables}
+
+    assert orch.tick(now) == {1: "success", 2: "failed", 3: "success"}
+
+    (task_file,) = _new_files(spark, tables[0], before[tables[0]])
+    assert _file_rows(spark, tables[0], task_file) == [
+        (1, "task1", "success", now, ""),
+        (2, "task2", "failed", now, "division by zero"),
+        (3, "task3", "success", now, ""),
+    ]
+    (alert_file,) = _new_files(spark, tables[1], before[tables[1]])
+    assert _file_rows(spark, tables[1], alert_file) == [
+        (1, "always", now, 1, True, ""),
+        (2, "never", now, 0, False, ""),
+    ]
+    assert orch._snap == orch.tick_snapshot()
+
+
+def test_failed_flush_commits_the_other_table_and_drops_memo(spark, orch, monkeypatch):
+    """A ``task_logs`` INSERT that fails at tick end: every due task
+    has run, ``alert_logs`` is still committed, the tick raises with
+    the memo dropped, and the next tick re-reads the log."""
+    from etl_spark.alerting import AlertEngine
+    from etl_spark.sources import writers
+
+    t0 = datetime(2024, 6, 15, 12, 0)
+    now = t0 + timedelta(minutes=1)
+    ran = []
+    engine = AlertEngine(spark, db=orch.db)
+    checks = _alerting_task(engine, now)
+    orch.register(_spec(1, lambda s: ran.append(1), interval_seconds=60), t0)
+    orch.register(_spec(2, lambda s: (ran.append(2), checks(s)), interval_seconds=60), t0)
+    orch.tick(t0)  # fills the memo from the empty log
+    real_insert = writers._insert_rows
+
+    def failing_insert(session, table, rows):
+        if table.endswith(".task_logs"):
+            raise RuntimeError("injected task_logs flush failure")
+        real_insert(session, table, rows)
+
+    monkeypatch.setattr(writers, "_insert_rows", failing_insert)
+    with pytest.raises(RuntimeError, match="injected task_logs flush failure"):
+        orch.tick(now)
+    monkeypatch.undo()
+
+    assert ran == [1, 2]
+    assert orch._snap is None
+    assert orch.logs().count() == 0
+    assert sorted(r.alert_id for r in engine.alert_logs().collect()) == [1, 2]
+    assert orch.tick(now) == {}
+    assert orch._snap == orch.tick_snapshot() == {}
+
+
+def test_run_now_during_tick_commits_before_returning(orch):
+    """A run-now from another thread while the tick is blocked inside
+    a task writes its row at once; the tick's rows, one of them logged
+    before the block, appear only when the tick returns."""
+    t0 = datetime(2024, 6, 15, 12, 0)
+    now = t0 + timedelta(minutes=1)
+    entered, release = threading.Event(), threading.Event()
+
+    def blocking(_spark):
+        entered.set()
+        if not release.wait(60):
+            raise TimeoutError("never released")
+
+    orch.register(_spec(1, lambda s: None, interval_seconds=60), t0)
+    orch.register(_spec(2, blocking, interval_seconds=60), t0)
+    orch.register(_spec(3, lambda s: None, interval_seconds=3600), t0)
+    outcome = []
+    ticker = threading.Thread(target=lambda: outcome.append(orch.tick(now)))
+    ticker.start()
+    try:
+        assert entered.wait(60)
+        assert orch.run_task(3, now) == "success"
+        assert [(r.task_id, r.status) for r in orch.logs().collect()] == [(3, "success")]
+    finally:
+        release.set()
+        ticker.join(60)
+    assert outcome == [{1: "success", 2: "success"}]
+    assert sorted(r.task_id for r in orch.logs().collect()) == [1, 2, 3]
+    assert orch._snap == orch.tick_snapshot()
+
+
+def test_interrupted_tick_commits_rows_already_logged(orch):
+    """A tick that a task aborts with a non-``Exception`` still commits
+    the rows logged before it, and drops the memo."""
+
+    class Abort(BaseException):
+        pass
+
+    def abort(_spark):
+        raise Abort()
+
+    t0 = datetime(2024, 6, 15, 12, 0)
+    now = t0 + timedelta(minutes=1)
+    orch.register(_spec(1, lambda s: None, interval_seconds=60), t0)
+    orch.register(_spec(2, abort, interval_seconds=60), t0)
+    orch.tick(t0)
+    with pytest.raises(Abort):
+        orch.tick(now)
+    assert [(r.task_id, r.status) for r in orch.logs().collect()] == [(1, "success")]
+    assert orch._snap is None
+    assert not orch.tasks[2].executing
