@@ -647,23 +647,40 @@ def connected_components(
         else:
             df.unpersist()
 
+    def _lazy_ckpt(df: DataFrame) -> tuple[DataFrame, DataFrame]:
+        """(a lazy checkpoint of ``df``, the frame holding its data):
+        the first action over the checkpoint materializes both."""
+        if checkpoint_dir is None:
+            out = df.localCheckpoint(eager=False)
+            return out, out
+        # Reliable checkpoint() writes the RDD in its own job after the
+        # first action; the persist lets that job read the cached rows
+        # instead of re-running the plan — the one-materialization
+        # property on the cluster path too (ADVICE r4).
+        held = df.persist()
+        return df.checkpoint(eager=False), held
+
     def _ckpt(df: DataFrame) -> DataFrame:
         while len(round_cache) > 1:  # keep current + newest only
             _release(round_cache.pop(0))
-        if checkpoint_dir is None:
-            out = df.localCheckpoint(eager=False)
-            round_cache.append(out)
-            return out
-        # Lazy checkpoints: the noop-sink round action materializes
-        # the persist; reliable checkpoint() then writes the RDD in
-        # its own job without re-running the (now cached) plan —
-        # the one-materialization property on the cluster path too
-        # (ADVICE r4).
-        round_cache.append(df.persist())
-        return df.checkpoint(eager=False)
+        out, held = _lazy_ckpt(df)
+        round_cache.append(held)
+        return out
+
+    def _materialize(ck: DataFrame, metric):
+        """Run ``ck``'s one materializing action, a noop-sink write,
+        and return ``metric`` aggregated over its rows."""
+        obs = Observation()
+        (
+            ck.observe(obs, metric.alias("v"))
+            .write.format("noop")
+            .mode("overwrite")
+            .save()
+        )
+        return obs.get["v"]
 
     prior_dir = None
-    pairs_ck = None
+    pairs_held = None
     edges = None
     try:
         if checkpoint_dir is not None:
@@ -672,18 +689,18 @@ def connected_components(
             sc.setCheckpointDir(checkpoint_dir)
         # Materialize the PAIRS under the CALLER's confs: the pair
         # pipeline upstream wants AQE's broadcast/skew handling, and a
-        # checkpoint (unlike a persist, whose final stage AQE may not
-        # coalesce) keeps AQE's coalesced partition count, so the loop
-        # below reads a handful of partitions, not shuffle.partitions.
+        # local checkpoint (unlike a persist, whose final stage AQE may
+        # not coalesce) keeps AQE's coalesced partition count, so the
+        # loop below reads a handful of partitions, not
+        # shuffle.partitions (the reliable path persists first, so it
+        # does read shuffle.partitions). The checkpoint is lazy: one
+        # noop-sink job fills it and counts its rows, as a round does.
         # The count sizes the loop's partitioning — scale-adaptive by
         # construction: 1 fat partition at fixture scale, ~edge-bytes /
         # 64 MB partitions at cluster scale. Each pair explodes into
         # exactly 4 edges.
-        if checkpoint_dir is None:
-            pairs_ck = pairs.localCheckpoint(eager=True)
-        else:
-            pairs_ck = pairs.checkpoint(eager=True)
-        n_edges = 4 * pairs_ck.count()
+        pairs_ck, pairs_held = _lazy_ckpt(pairs)
+        n_edges = 4 * _materialize(pairs_ck, F.count(F.lit(1)))
         n_parts = max(
             1, -(-(n_edges * _CC_EDGE_BYTES) // _CC_TARGET_PART_BYTES)
         )
@@ -730,16 +747,9 @@ def connected_components(
             """Materialize one round (checkpoint-backed) and return
             (frame, decimal label sum) from ONE noop-sink job."""
             ck = _ckpt(df)
-            obs = Observation()
-            (
-                ck.observe(
-                    obs, F.sum(F.col("lbl").cast("decimal(38,0)")).alias("s")
-                )
-                .write.format("noop")
-                .mode("overwrite")
-                .save()
+            return ck, _materialize(
+                ck, F.sum(F.col("lbl").cast("decimal(38,0)"))
             )
-            return ck, obs.get["s"]
 
         # initialize at ROUND 1's output, not at label=self: the vertex
         # set needs a groupBy over edges anyway, and with self-loops the
@@ -750,7 +760,7 @@ def connected_components(
             edges.groupBy(F.col("src").alias("doc_id"))
             .agg(F.min("dst").alias("lbl"))
         )
-        _release(pairs_ck)  # superseded by the dst-partitioned cache
+        _release(pairs_held)  # superseded by the dst-partitioned cache
         for _ in range(MAX_CC_ITERS):
             # build the per-partition hash table on the (smaller)
             # label side; the co-partitioned layout means neither side
@@ -770,15 +780,20 @@ def connected_components(
         for df in round_cache:
             _release(df)
         raise
+    else:
+        # only the final round backs the returned labels: its
+        # checkpoint no longer reads the round before it
+        for df in round_cache[:-1]:
+            _release(df)
     finally:
-        if pairs_ck is not None:
-            _release(pairs_ck)  # no-op if already released above
+        if pairs_held is not None:
+            _release(pairs_held)  # no-op if already released above
         if edges is not None:
             edges.unpersist()
         # setCheckpointDir mutates global SparkContext state; put back
         # whatever was there before so callers' checkpoint config
-        # survives this function (ADVICE r4). The final rounds stay
-        # persisted — they back the returned labels frame.
+        # survives this function (ADVICE r4). The final round stays
+        # persisted — it backs the returned labels frame.
         if checkpoint_dir is not None and prior_dir is not None:
             sc.setCheckpointDir(prior_dir)
     return rebind(labels, spark)

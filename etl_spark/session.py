@@ -26,6 +26,16 @@ from pyspark.sql import DataFrame, SparkSession
 #    the edges so timestamp semantics are unambiguous.
 #  - arrow enabled: every toPandas()/applyInPandas boundary is
 #    Arrow-batched, never row-at-a-time pickling.
+#  - codegen.cache.maxEntries: Spark's generated-code cache (default
+#    100 classes) is an LRU, and a cyclic LRU over a working set larger
+#    than its bound never hits. At sf0.001 the 240 registered queries
+#    generate 2,815 distinct classes, the six perfbench `queries` 132.
+#    On 4 cores, a second pass over the registry with an unbounded
+#    cache compiled 38 classes in 85.4 s; at the default it recompiled
+#    4,167 in 108.8 s, and the JIT then compiled the fresh classes
+#    again. Metaspace was 218 MB against 200 MB. The conf is static: it is
+#    read when the JVM's first SparkContext starts, so a session built
+#    elsewhere before get_spark keeps Spark's 100.
 _DEFAULTS = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
@@ -37,6 +47,7 @@ _DEFAULTS = {
     "spark.driver.memory": "8g",
     "spark.ui.enabled": "false",
     "spark.sql.shuffle.partitions": "32",
+    "spark.sql.codegen.cache.maxEntries": "4096",
 }
 
 

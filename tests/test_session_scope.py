@@ -166,3 +166,18 @@ def test_cc_round_failure_leaves_caller_session_as_found(spark, monkeypatch):
     assert FailingObservation.rounds == 3
     assert dict(spark.conf.getAll) == confs
     assert _persisted_rdd_ids(spark) <= rdds
+
+
+def test_cc_keeps_only_the_final_round_persisted(spark, sf_dir):
+    """x69 persists its CC rounds; once a call returns, only the final
+    round, which backs the returned labels, stays persisted. New ids
+    are counted rather than the map's size: the map holds weak values,
+    so garbage collection may drop older entries at any time."""
+    x69 = all_specs()["x69_cluster_size_histogram"]
+    held = []  # keep each result (and the round behind it) alive
+    for _ in range(5):
+        before = _persisted_rdd_ids(spark)
+        df = x69.fn(spark, sf_dir)
+        df.collect()
+        held.append(df)
+        assert len(_persisted_rdd_ids(spark) - before) <= 1

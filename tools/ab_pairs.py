@@ -7,11 +7,13 @@ For each seed it runs the benchmark command from BENCHMARK.json
 (``perfbench/run.py … --trace 0`` at the file's ``run_seconds``) once
 in DIR and once in this tree, alternating which side runs first, and
 reads each run's last stdout line as JSON. It prints every pair's
-end-to-end metrics, each side's median and quartiles, the change's
-win count (ties count for neither side) and failed/attempted per
-side, then whether a gain would be claimable: wins on at least nine
-tenths of the pairs and a median gap wider than the base's
-interquartile range. Stdlib only; it imports no engine code.
+end-to-end metrics with each run's load average before and after (so
+a pair measured on a busy host shows), each side's median and
+quartiles, the change's win count (ties count for neither side) and
+failed/attempted per side, then whether a gain would be claimable:
+wins on at least nine tenths of the pairs and a median gap wider than
+the base's interquartile range. Stdlib only; it imports no engine
+code.
 """
 
 from __future__ import annotations
@@ -24,6 +26,7 @@ import subprocess
 import sys
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+LOAD_KEYS = ("loadavg_before", "loadavg_after")
 
 
 def parse_seeds(text: str) -> list[int]:
@@ -36,17 +39,23 @@ def parse_seeds(text: str) -> list[int]:
 
 
 def run_once(tree: str, command: list[str], workload: str, seed: int, seconds: float) -> dict:
-    """One benchmark run in ``tree``; returns its last JSON line, or
-    ``{"error": ...}`` when the run printed none."""
+    """One benchmark run in ``tree``; returns its last JSON line plus
+    the ``loadavg_before``/``loadavg_after`` lines it printed, or
+    ``{"error": ...}`` when the run printed no JSON line."""
     args = [*command, "--workload", workload, "--seed", str(seed),
             "--seconds", str(seconds), "--trace", "0"]
     proc = subprocess.run(args, cwd=tree, capture_output=True, text=True)
     lines = proc.stdout.strip().splitlines()
     try:
-        return json.loads(lines[-1])
+        result = json.loads(lines[-1])
     except (IndexError, json.JSONDecodeError):
         tail = (proc.stderr or proc.stdout).strip().splitlines()[-3:]
         return {"error": f"exit {proc.returncode}: {' | '.join(tail)}"}
+    for line in lines:
+        key, _, value = line.strip().partition(": ")
+        if key in LOAD_KEYS:
+            result[key] = value
+    return result
 
 
 def spread(values: list[float]) -> tuple[float, float, float]:
@@ -82,7 +91,8 @@ def main(argv: list[str] | None = None) -> int:
                 cells.append(f"{side} ERROR {r['error']}")
             else:
                 vals = " ".join(f"{k}={r['metrics'][k]['value']:.4g}" for k in metrics)
-                cells.append(f"{side} {vals} failed={r['failed']}/{r['attempted']}")
+                load = " ".join(f"{k}=[{r.get(k, '?')}]" for k in LOAD_KEYS)
+                cells.append(f"{side} {vals} failed={r['failed']}/{r['attempted']} {load}")
         print(f"seed {seed} ({order[0]} first): " + "; ".join(cells), flush=True)
 
     ok = [
