@@ -246,14 +246,15 @@ def check_profile_drift(
     drift = profile_drift(
         current, baseline, abs_tol=abs_tol, rel_tol=rel_tol
     ).filter("breached").persist()
-    n_breached = drift.count()  # the TRUE count — the return value
-    if not n_breached:
+    try:
+        n_breached = drift.count()  # the TRUE count — the return value
+        if not n_breached:
+            return 0
+        top = drift.orderBy(
+            F.desc_nulls_last("rel_change"), "item", "metric"
+        ).limit(max_lines).collect()
+    finally:
         drift.unpersist()
-        return 0
-    top = drift.orderBy(
-        F.desc_nulls_last("rel_change"), "item", "metric"
-    ).limit(max_lines).collect()
-    drift.unpersist()
     lines = [
         f"{r['item']}.{r['metric']}: {r['base']} -> {r['cur']} "
         f"({r['status']}, rel_change={r['rel_change']})"

@@ -47,7 +47,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_spark.registry import ADVISORY_COALESCE, register
+from etl_spark.registry import register
 from etl_spark.tables import load
 
 Q = 2  # q-gram width
@@ -131,10 +131,6 @@ def fuzzy_pairs(names: DataFrame, max_dist: int = MAX_DIST, q: int = Q) -> DataF
     """,
     tags=("extension", "fuzzy", "entity-resolution", "scale"),
     doc="Edit-distance<=2 part-name pairs via lossless q-gram blocking.",
-    # sketch-sized reduce sides -> advisory-size AQE coalescing
-    # (registry.ADVISORY_COALESCE; r16 guide §2.2 — interleaved A/B
-    # ≤1.0 at 32c, bounded state at any scale)
-    session_confs=ADVISORY_COALESCE,
 )
 def x86_fuzzy_name_match(spark: SparkSession, sf: str) -> DataFrame:
     """Part names within 2 edits of each other — typo/variant

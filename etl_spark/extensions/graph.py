@@ -43,7 +43,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_spark.registry import ADVISORY_COALESCE, register
+from etl_spark.registry import register
 from etl_spark.tables import load
 
 SCALE = 10**12  # fixed-point scale for rank mass
@@ -140,7 +140,6 @@ _X85_ORACLE = f"""
     oracle=_X85_ORACLE,
     tags=("extension", "graph", "iterative", "scale"),
     doc="Fixed-point PageRank over the customer<->supplier trade graph.",
-    session_confs=ADVISORY_COALESCE,
 )
 def x85_pagerank_trade_graph(spark: SparkSession, sf: str) -> DataFrame:
     """Rank every customer and supplier by trade-graph centrality:
@@ -151,8 +150,6 @@ def x85_pagerank_trade_graph(spark: SparkSession, sf: str) -> DataFrame:
     orientations exploded from a single pass, persisted once and
     reused by all three rounds; per-round work is one skinny
     (node, share) shuffle join plus a |V|-row aggregate."""
-    # ~70 static Exchanges of small (node, share) rows: shuffle COUNT
-    # dominates, hence the registration's ADVISORY_COALESCE pin
     li = load(spark, sf, "lineitem").select("l_orderkey", "l_suppkey")
     orders = load(spark, sf, "orders").select("o_orderkey", "o_custkey")
     pairs = (

@@ -41,38 +41,18 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 _SESSION_PINS: dict[str, str] = {
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.ansi.enabled": "true",
-    # AQE partition-coalescing mode: every query starts from the Spark
-    # default (true = maximize parallelism) whatever the host session
-    # says; ADVISORY_COALESCE overrides it per query.
-    "spark.sql.adaptive.coalescePartitions.parallelismFirst": "true",
 }
 
 
-# Per-query override for shuffle-COUNT-dominated plans (guide §2.2
-# "fewer, larger reduce partitions"): honor
-# advisoryPartitionSizeInBytes instead of spreading every tiny shuffle
-# across all cores as sliver partitions — the Spark-docs-recommended
-# production mode, and 100 TB-correct for SKETCH-sized reduce sides
-# (KMV registers, CMS rows, bottom-k heaps, posting aggregates) whose
-# state never grows with the corpus. PERF_r15 measured those queries
-# 1.7–3.7x FASTER at 8 cores than 32 under the default; x85's ~70
-# small PageRank exchanges gained 0.72–0.91 (r15 A/B, identical rows).
-ADVISORY_COALESCE: dict[str, str] = {
-    "spark.sql.adaptive.coalescePartitions.parallelismFirst": "false",
-}
-
-
-def _pin_session(
-    fn: QueryFn, session_confs: dict[str, str] | None = None
-) -> QueryFn:
+def _pin_session(fn: QueryFn) -> QueryFn:
     """Wrap a query fn so every invocation runs on a child of the
-    caller's session carrying ``_SESSION_PINS`` plus the spec's
-    per-query ``session_confs`` overrides (session.scoped_session)."""
-    pins = {**_SESSION_PINS, **(session_confs or {})}
+    caller's session carrying ``_SESSION_PINS``
+    (session.scoped_session). Every registered query shares that one
+    child per caller; partition sizing is left to AQE's defaults."""
 
     @functools.wraps(fn)
     def run(spark: SparkSession, sf: str) -> DataFrame:
-        return fn(scoped_session(spark, pins), sf)
+        return fn(scoped_session(spark, _SESSION_PINS), sf)
 
     return run
 
@@ -94,17 +74,16 @@ def register(
     oracle: str | None = None,
     tags: tuple[str, ...] = (),
     doc: str = "",
-    session_confs: dict[str, str] | None = None,
 ) -> Callable[[QueryFn], QueryFn]:
     """Decorator: register a query under ``name``.
 
     The registered callable is wrapped by ``_pin_session``: it runs on
     a cached child of the caller's SparkSession carrying
-    ``_SESSION_PINS`` plus ``session_confs``, and the returned frame is
-    bound to that child, so the pins hold through the caller's
-    ``collect()`` while the caller's confs are never written. Caller
-    confs changed after the first registered call on a session do not
-    reach later registered queries (the child is cloned once).
+    ``_SESSION_PINS``, and the returned frame is bound to that child,
+    so the pins hold through the caller's ``collect()`` while the
+    caller's confs are never written. Caller confs changed after the
+    first registered call on a session do not reach later registered
+    queries (the child is cloned once).
     """
 
     def deco(fn: QueryFn) -> QueryFn:
@@ -112,7 +91,7 @@ def register(
             raise ValueError(f"duplicate query name {name!r}")
         _REGISTRY[name] = QuerySpec(
             name=name,
-            fn=_pin_session(fn, session_confs),
+            fn=_pin_session(fn),
             oracle=oracle,
             tags=tuple(tags),
             doc=doc or (fn.__doc__ or ""),

@@ -184,6 +184,28 @@ def test_check_profile_drift_notifies_on_breach_only(spark):
     assert "mean" not in n.sent[0]["body"]
 
 
+def test_check_profile_drift_releases_cache_on_failure(spark):
+    """A drift check whose count raises leaves nothing cached."""
+    from pyspark.sql import functions as F
+
+    from etl_spark.alerting import CollectingNotifier, check_profile_drift
+
+    spark.catalog.clearCache()
+    base = spark.createDataFrame(
+        [("v", "mean", 100.0)], "item STRING, metric STRING, value DOUBLE"
+    )
+    # range-backed: a local relation's projection would be evaluated
+    # while planning the persist, before the count runs
+    current = spark.range(1).select(
+        F.lit("v").alias("item"),
+        F.lit("mean").alias("metric"),
+        F.raise_error(F.lit("profile read failed")).cast("double").alias("value"),
+    )
+    with pytest.raises(Exception, match="profile read failed"):
+        check_profile_drift(current, base, CollectingNotifier())
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_check_never_caches(engine, spark, tmp_path, monkeypatch):
     """An alert check is one Spark action on the query itself: nothing
     is cached or persisted, with or without an export."""

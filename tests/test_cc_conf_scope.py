@@ -2,16 +2,16 @@
 queries.
 
 connected_components runs its rounds on a child session with AQE off
-and a pinned partition count; registered queries run on a child
-carrying the registry pins. Either way the caller's confs are never
-written, and the returned frame's session carries the confs it ran
-under.
+and a pinned partition count; every registered query runs on one child
+per caller carrying the registry pins. Either way the caller's confs
+are never written, and the returned frame's session carries the confs
+it ran under.
 """
 
 from __future__ import annotations
 
 from etl_spark.extensions.dedup import connected_components
-from etl_spark.registry import _SESSION_PINS, ADVISORY_COALESCE, all_specs
+from etl_spark.registry import _SESSION_PINS, all_specs
 
 PF = "spark.sql.adaptive.coalescePartitions.parallelismFirst"
 
@@ -41,26 +41,30 @@ def test_cc_restores_nondefault_value_too(spark):
         spark.conf.set(PF, "true")
 
 
-def test_x85_pin_stays_on_its_child(spark, sf_dir):
+def _frames_share_one_pinned_child(spark, sf_dir, names):
     specs = all_specs()
     before = dict(spark.conf.getAll)
-    df = specs["x85_pagerank_trade_graph"].fn(spark, sf_dir)
-    df.collect()
-    assert df.sparkSession is not spark
-    assert df.sparkSession.conf.get(PF) == "false"
+    frames = [specs[n].fn(spark, sf_dir) for n in names]
+    frames[0].collect()
+    child = frames[0].sparkSession
+    assert child is not spark
+    assert all(df.sparkSession is child for df in frames)
+    for k, v in _SESSION_PINS.items():
+        assert child.conf.get(k) == v
     assert dict(spark.conf.getAll) == before
+
+
+def test_x85_pin_stays_on_its_child(spark, sf_dir):
+    _frames_share_one_pinned_child(
+        spark, sf_dir, ["x85_pagerank_trade_graph", "x76_kmv_distinct_customers",
+                        "x89_substring_dup_coverage"]
+    )
 
 
 def test_sketch_family_advisory_override(spark, sf_dir):
-    """Sketch-family queries run under advisory-size AQE coalescing
-    (registry.ADVISORY_COALESCE) on their own child session; queries
-    the A/B rejected stay on the default pins."""
-    specs = all_specs()
-    before = dict(spark.conf.getAll)
-    sketch = specs["x76_kmv_distinct_customers"].fn(spark, sf_dir)
-    assert sketch.sparkSession.conf.get(PF) == ADVISORY_COALESCE[PF]
-    plain = specs["x89_substring_dup_coverage"].fn(spark, sf_dir)
-    for k, v in _SESSION_PINS.items():
-        assert plain.sparkSession.conf.get(k) == v
-    assert plain.sparkSession is not sketch.sparkSession
-    assert dict(spark.conf.getAll) == before
+    """The sketch family has no conf set of its own: x76 runs on the
+    same pinned child as x85 and x89."""
+    _frames_share_one_pinned_child(
+        spark, sf_dir, ["x76_kmv_distinct_customers", "x85_pagerank_trade_graph",
+                        "x89_substring_dup_coverage"]
+    )

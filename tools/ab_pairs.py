@@ -12,8 +12,9 @@ a pair measured on a busy host shows), each side's median and
 quartiles, the change's win count (ties count for neither side) and
 failed/attempted per side, then whether a gain would be claimable:
 wins on at least nine tenths of the pairs and a median gap wider than
-the base's interquartile range. Stdlib only; it imports no engine
-code.
+the base's interquartile range. It also prints a no-regression
+verdict per metric against that metric's ``bound`` (see ``verdict``).
+Stdlib only; it imports no engine code.
 """
 
 from __future__ import annotations
@@ -66,6 +67,23 @@ def spread(values: list[float]) -> tuple[float, float, float]:
     return q1, q2, q3
 
 
+def verdict(base: list[float], change: list[float], better: str, bound: float) -> str:
+    """No-regression verdict for one metric: ``worse`` when the
+    change's median is worse than the base median by more than
+    ``bound`` x base median; ``unresolved`` when the base's
+    interquartile range is wider than that margin and not every change
+    run beats every base run; ``within bound`` otherwise."""
+    sign = 1 if better == "lower" else -1
+    bq1, bmed, bq3 = spread(base)
+    margin = bound * abs(bmed)
+    if sign * (spread(change)[1] - bmed) > margin:
+        return "worse"
+    beats_all = all(sign * (b - c) > 0 for b in base for c in change)
+    if bq3 - bq1 > margin and not beats_all:
+        return "unresolved"
+    return "within bound"
+
+
 def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("--workload", required=True)
@@ -75,6 +93,7 @@ def main(argv: list[str] | None = None) -> int:
     with open(os.path.join(ROOT, "BENCHMARK.json")) as fh:
         bench = json.load(fh)
     metrics = {m["name"]: m["better"] for m in bench["end_to_end"]}
+    bounds = {m["name"]: m["bound"] for m in bench["end_to_end"]}
     sides = {"base": os.path.abspath(args.base), "change": ROOT}
 
     runs: dict[str, list[dict]] = {"base": [], "change": []}
@@ -120,6 +139,8 @@ def main(argv: list[str] | None = None) -> int:
             f"  change median {cmed:.4g} [{cq1:.4g}, {cq3:.4g}]"
             f"  change/base {cmed / bmed:.3f}  wins {wins}/{len(ok)}"
             f"  gain claimable: {'yes' if claim else 'no'}"
+            f"  no-regression (bound {bounds[name]}): "
+            f"{verdict(base, change, better, bounds[name])}"
         )
     return 0
 
