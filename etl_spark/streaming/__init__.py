@@ -12,7 +12,6 @@ from etl_spark.streaming.stateful import sessionize_stream
 from etl_spark.streaming.sinks import (
     enrich_stream,
     interval_join,
-    run_append_sink,
     run_merge_sink,
 )
 
@@ -26,6 +25,5 @@ __all__ = [
     "sessionize_stream",
     "enrich_stream",
     "interval_join",
-    "run_append_sink",
     "run_merge_sink",
 ]

@@ -41,7 +41,7 @@ from etl_spark.extensions.sketches import (
     bitmap_count,
     bitmap_merge,
 )
-from etl_spark.streaming.neardup import batch_committed
+from etl_spark.streaming.neardup import batch_committed, drain, write_counted
 
 _SCHEMA = "day date, chunk bigint, bits bigint"
 
@@ -103,8 +103,7 @@ def distinct_counts(spark: SparkSession, path: str) -> DataFrame:
 def run_distinct_ingest(
     stream_df: DataFrame,
     state_path: str,
-    checkpoint: str | None = None,
-    available_now: bool = True,
+    checkpoint: str,
     on_batch: Callable[[int, int], Any] | None = None,
 ) -> StreamingQuery:
     """``foreachBatch`` sink maintaining the daily distinct-user
@@ -127,12 +126,7 @@ def run_distinct_ingest(
         if on_batch is not None:
             on_batch(batch_id, batch_df.count())
 
-    writer = stream_df.writeStream.foreachBatch(_ingest).outputMode("update")
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return drain(stream_df, _ingest, checkpoint)
 
 
 def _compact_state(
@@ -150,11 +144,8 @@ def _compact_state(
     dirs = _state_dirs(path)
     if not dirs:
         return
-    merged = state_fn(spark, path).persist()
-    merged.count()
     tmp = os.path.join(path, "base.tmp")
-    merged.write.mode("overwrite").parquet(tmp)
-    merged.unpersist()
+    write_counted(state_fn(spark, path), tmp)
     base = os.path.join(path, "base")
     bak = os.path.join(path, "base.bak")
     shutil.rmtree(bak, ignore_errors=True)  # stale bak from a crashed run
@@ -213,8 +204,7 @@ def hll_distinct_estimates(
 def run_hll_ingest(
     stream_df: DataFrame,
     state_path: str,
-    checkpoint: str | None = None,
-    available_now: bool = True,
+    checkpoint: str,
     on_batch: Callable[[int, int], Any] | None = None,
 ) -> StreamingQuery:
     """``foreachBatch`` sink maintaining per-day HLL registers from an
@@ -239,12 +229,7 @@ def run_hll_ingest(
         if on_batch is not None:
             on_batch(batch_id, batch_df.count())
 
-    writer = stream_df.writeStream.foreachBatch(_ingest).outputMode("update")
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return drain(stream_df, _ingest, checkpoint)
 
 
 def compact_hll_state(spark: SparkSession, path: str) -> None:

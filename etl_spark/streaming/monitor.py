@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from etl_spark.alerting import Notifier, evaluate_condition
+from etl_spark.streaming.neardup import batch_committed, drain, write_counted
 
 # the driver fixture's current events schema (ts: naive timestamp[us])
 EVENTS_DDL = (
@@ -119,15 +120,16 @@ def run_threshold_monitor(
     condition: str = "rows_gt",
     threshold: int = 0,
     filter_expr: str = "true",
-    checkpoint: str | None = None,
-    available_now: bool = True,
+    *,
+    checkpoint: str,
     on_batch: Callable[[int, int], Any] | None = None,
 ) -> StreamingQuery:
     """T8 as a `foreachBatch` sink: per micro-batch, count rows
     matching `filter_expr`, evaluate the reference's condition map,
-    notify on trigger. `available_now=True` drains all pending input
-    then stops — the testable/batch-drain mode; pass False for a
-    continuously-running monitor."""
+    notify on trigger. Each call drains all pending input then stops;
+    a standing monitor is the Orchestrator re-running the drain on its
+    schedule with the same `checkpoint`, and each drain sees only the
+    input that arrived since the previous one."""
 
     def _check(batch_df: DataFrame, batch_id: int) -> None:
         n = batch_df.filter(filter_expr).count()
@@ -139,12 +141,7 @@ def run_threshold_monitor(
                 body=f"batch {batch_id}: {n} rows match {filter_expr!r}",
             )
 
-    writer = stream_df.writeStream.foreachBatch(_check).outputMode("update")
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return drain(stream_df, _check, checkpoint)
 
 
 def dedup_stream(
@@ -180,8 +177,6 @@ def _latest_committed_version(store_path: str, below: int | None = None) -> str 
     import os
     import re
 
-    from etl_spark.streaming.neardup import batch_committed
-
     best: tuple[int, str] | None = None
     for d in glob.glob(os.path.join(store_path, "v*")):
         m = re.fullmatch(r"v(\d+)", os.path.basename(d))
@@ -195,14 +190,46 @@ def _latest_committed_version(store_path: str, below: int | None = None) -> str 
     return None if best is None else best[1]
 
 
+def _versioned_fold(
+    store_path: str,
+    step: Callable[[DataFrame, DataFrame | None], DataFrame],
+    on_batch: Callable[[int, int], Any] | None,
+) -> Callable[[DataFrame, int], None]:
+    """The ``foreachBatch`` body shared by the versioned monitors.
+    Batch N writes ``store_path/v<N>``, committed by its _SUCCESS
+    marker: a committed version is skipped (replay); otherwise the
+    newest committed version below N is folded with the batch by
+    ``step(batch_df, prev_df | None)`` and written by one write that
+    also counts the rows, reported as ``on_batch(batch_id, n_rows)``.
+    Each version is a pure function of the immutable version below it
+    and the batch, so a re-run writes the same rows."""
+    import os
+
+    def _fold(batch_df: DataFrame, batch_id: int) -> None:
+        out_dir = os.path.join(store_path, f"v{batch_id}")
+        if batch_committed(out_dir):
+            return
+        prev_dir = _latest_committed_version(store_path, below=batch_id)
+        prev = (
+            None
+            if prev_dir is None
+            else batch_df.sparkSession.read.parquet(prev_dir)
+        )
+        n_rows = write_counted(step(batch_df, prev), out_dir)
+        if on_batch is not None:
+            on_batch(batch_id, n_rows)
+
+    return _fold
+
+
 def run_distinct_monitor(
     stream_df: DataFrame,
     store_path: str,
     group_col: str = "event_type",
     key_col: str = "user_id",
     k: int | None = None,
-    checkpoint: str | None = None,
-    available_now: bool = True,
+    *,
+    checkpoint: str,
     on_batch: Callable[[int, int], Any] | None = None,
 ) -> StreamingQuery:
     """Per-group distinct-``key_col`` tracking as a micro-batch-merged
@@ -223,43 +250,20 @@ def run_distinct_monitor(
     the identical bytes anyway, since v<N> is a pure function of the
     immutable v<N-1> and the batch. ``on_batch(batch_id, n_kept)``
     observes. Read the answer with ``distinct_estimates``."""
-    import os
-
     from etl_spark.extensions.sketches import _H_SPARK, K_SKETCH, salted_min_k
-    from etl_spark.streaming.neardup import batch_committed
 
     kk = k if k is not None else K_SKETCH
 
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        out_dir = os.path.join(store_path, f"v{batch_id}")
-        if batch_committed(out_dir):
-            return
-        spark = batch_df.sparkSession
+    def _step(batch_df: DataFrame, prev: DataFrame | None) -> DataFrame:
         hashed = batch_df.select(
             F.col(group_col).alias("grp"),
             F.expr(_H_SPARK.format(col=key_col)).alias("h"),
         ).distinct()
-        prev_dir = _latest_committed_version(store_path, below=batch_id)
-        if prev_dir is not None:
-            hashed = spark.read.parquet(prev_dir).unionByName(hashed).distinct()
-        kept = salted_min_k(hashed, ["grp"], k=kk).select("grp", "h")
-        kept = kept.persist()
-        n_kept = kept.count()
-        (
-            kept.write.mode("overwrite")
-            .option("partitionOverwriteMode", "static")
-            .parquet(out_dir)
-        )
-        kept.unpersist()
-        if on_batch is not None:
-            on_batch(batch_id, n_kept)
+        if prev is not None:
+            hashed = prev.unionByName(hashed).distinct()
+        return salted_min_k(hashed, ["grp"], k=kk).select("grp", "h")
 
-    writer = stream_df.writeStream.foreachBatch(_merge).outputMode("update")
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return drain(stream_df, _versioned_fold(store_path, _step, on_batch), checkpoint)
 
 
 def distinct_estimates(spark: SparkSession, store_path: str, k: int | None = None) -> DataFrame:
@@ -307,8 +311,8 @@ def run_weighted_sample_monitor(
     id_col: str = "event_id",
     keep_cols: tuple[str, ...] = ("event_type",),
     k: int = 512,
-    checkpoint: str | None = None,
-    available_now: bool = True,
+    *,
+    checkpoint: str,
     on_batch: Callable[[int, int], Any] | None = None,
 ) -> StreamingQuery:
     """Priority sampling (x80, Duffield-Lund-Thorup '07) at the ingest
@@ -327,46 +331,23 @@ def run_weighted_sample_monitor(
     version _SUCCESS-committed, replays skipped on the marker.
     ``on_batch(batch_id, n_kept)`` observes. Read with
     ``weighted_sample_estimates``."""
-    import os
-
     from etl_spark.extensions.sketches import _H_SPARK, _Q_EXPR
-    from etl_spark.streaming.neardup import batch_committed
 
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        out_dir = os.path.join(store_path, f"v{batch_id}")
-        if batch_committed(out_dir):
-            return
-        spark = batch_df.sparkSession
+    def _step(batch_df: DataFrame, prev: DataFrame | None) -> DataFrame:
         pri = batch_df.select(
             F.col(id_col).alias("sample_id"),
             *keep_cols,
             F.col(weight_col).cast("double").alias("w"),
             F.expr(_H_SPARK.format(col=id_col)).alias("h"),
         ).withColumn("q", F.expr(_Q_EXPR))
-        prev_dir = _latest_committed_version(store_path, below=batch_id)
-        if prev_dir is not None:
-            pri = spark.read.parquet(prev_dir).unionByName(pri)
+        if prev is not None:
+            pri = prev.unionByName(pri)
         # at-least-once sources can redeliver a row in a LATER batch;
         # a doubled sample member would bias every subset sum, so the
         # sample is keyed on the id (h derives from it — same dedup)
-        kept = pri.dropDuplicates(["sample_id"]).orderBy(F.desc("q"), "h").limit(k + 1)
-        kept = kept.persist()
-        n_kept = kept.count()
-        (
-            kept.write.mode("overwrite")
-            .option("partitionOverwriteMode", "static")
-            .parquet(out_dir)
-        )
-        kept.unpersist()
-        if on_batch is not None:
-            on_batch(batch_id, n_kept)
+        return pri.dropDuplicates(["sample_id"]).orderBy(F.desc("q"), "h").limit(k + 1)
 
-    writer = stream_df.writeStream.foreachBatch(_merge).outputMode("update")
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return drain(stream_df, _versioned_fold(store_path, _step, on_batch), checkpoint)
 
 
 def weighted_sample_estimates(
@@ -422,8 +403,8 @@ def run_freq_monitor(
     stream_df: DataFrame,
     store_path: str,
     text_col: str = "text",
-    checkpoint: str | None = None,
-    available_now: bool = True,
+    *,
+    checkpoint: str,
     on_batch: Callable[[int, int], Any] | None = None,
 ) -> StreamingQuery:
     """Corpus token frequencies at ingest as a micro-batch-merged
@@ -440,47 +421,24 @@ def run_freq_monitor(
     monitors, whose state is keyed and self-deduplicating). Front an
     at-least-once source with ``dedup_stream`` when exactly-once
     counts matter."""
-    import os
-
     from etl_spark.extensions.sketches import _TOKENS_SPARK_T, cms_cells
-    from etl_spark.streaming.neardup import batch_committed
 
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        out_dir = os.path.join(store_path, f"v{batch_id}")
-        if batch_committed(out_dir):
-            return
-        spark = batch_df.sparkSession
+    def _step(batch_df: DataFrame, prev: DataFrame | None) -> DataFrame:
         tokens = batch_df.select(
             F.explode(
                 F.expr(_TOKENS_SPARK_T.format(col=text_col))
             ).alias("token")
         )
         cells = cms_cells(tokens)
-        prev_dir = _latest_committed_version(store_path, below=batch_id)
-        if prev_dir is not None:
-            cells = (
-                spark.read.parquet(prev_dir)
-                .unionByName(cells)
-                .groupBy("d", "bucket")
-                .agg(F.sum("cell_cnt").alias("cell_cnt"))
-            )
-        cells = cells.persist()
-        n_cells = cells.count()
-        (
-            cells.write.mode("overwrite")
-            .option("partitionOverwriteMode", "static")
-            .parquet(out_dir)
+        if prev is None:
+            return cells
+        return (
+            prev.unionByName(cells)
+            .groupBy("d", "bucket")
+            .agg(F.sum("cell_cnt").alias("cell_cnt"))
         )
-        cells.unpersist()
-        if on_batch is not None:
-            on_batch(batch_id, n_cells)
 
-    writer = stream_df.writeStream.foreachBatch(_merge).outputMode("update")
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return drain(stream_df, _versioned_fold(store_path, _step, on_batch), checkpoint)
 
 
 def freq_estimates(
@@ -506,8 +464,8 @@ def run_profile_monitor(
     store_path: str,
     include: list[str] | None = None,
     rules: dict[str, str] | None = None,
-    checkpoint: str | None = None,
-    available_now: bool = True,
+    *,
+    checkpoint: str,
     on_batch: Callable[[int, int], Any] | None = None,
 ) -> StreamingQuery:
     """Corpus-to-date data-quality profile kept current at ingest —
@@ -526,37 +484,13 @@ def run_profile_monitor(
     replay-skip discipline as the KMV and CMS monitors. Read with
     ``profile_snapshot``; alert by diffing snapshots with
     ``quality.profile_drift``."""
-    import os
-
     from etl_spark.quality import merge_accumulators, profile_accumulators
-    from etl_spark.streaming.neardup import batch_committed
 
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        out_dir = os.path.join(store_path, f"v{batch_id}")
-        if batch_committed(out_dir):
-            return
-        spark = batch_df.sparkSession
+    def _step(batch_df: DataFrame, prev: DataFrame | None) -> DataFrame:
         acc = profile_accumulators(batch_df, include, rules)
-        prev_dir = _latest_committed_version(store_path, below=batch_id)
-        if prev_dir is not None:
-            acc = merge_accumulators(spark.read.parquet(prev_dir), acc)
-        acc = acc.persist()
-        n_rows = acc.count()
-        (
-            acc.write.mode("overwrite")
-            .option("partitionOverwriteMode", "static")
-            .parquet(out_dir)
-        )
-        acc.unpersist()
-        if on_batch is not None:
-            on_batch(batch_id, n_rows)
+        return acc if prev is None else merge_accumulators(prev, acc)
 
-    writer = stream_df.writeStream.foreachBatch(_merge).outputMode("update")
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return drain(stream_df, _versioned_fold(store_path, _step, on_batch), checkpoint)
 
 
 def profile_snapshot(spark: SparkSession, store_path: str) -> DataFrame:
@@ -573,8 +507,7 @@ def profile_snapshot(spark: SparkSession, store_path: str) -> DataFrame:
 def run_cc_monitor(
     pairs_stream: DataFrame,
     store_path: str,
-    checkpoint: str | None = None,
-    available_now: bool = True,
+    checkpoint: str,
     on_batch: Callable[[int, bool], Any] | None = None,
 ) -> StreamingQuery:
     """Duplicate-cluster labels kept current as near-dup PAIRS stream
@@ -595,9 +528,4 @@ def run_cc_monitor(
         if on_batch is not None:
             on_batch(batch_id, wrote)
 
-    writer = pairs_stream.writeStream.foreachBatch(_merge).outputMode("update")
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return drain(pairs_stream, _merge, checkpoint)

@@ -55,6 +55,51 @@ def batch_committed(batch_dir: str) -> bool:
     return os.path.isfile(os.path.join(batch_dir, "_SUCCESS"))
 
 
+def drain(
+    stream_df: DataFrame,
+    fn: Callable[[DataFrame, int], None],
+    checkpoint: str,
+    output_mode: str = "update",
+) -> StreamingQuery:
+    """The one start path of every streaming sink: run ``fn`` as the
+    ``foreachBatch`` body over all input pending now, then stop
+    (``availableNow``). A standing monitor is the same drain re-run on
+    a schedule against the same ``checkpoint``; each run picks up only
+    what arrived since the last.
+
+    ``checkpoint`` is required: every sink skips replays on markers
+    named by batch id, and batch ids are stable only across runs that
+    share a checkpoint. A run without one restarts at batch 0, finds
+    the previous run's committed ``batch-0`` / ``v0`` and silently
+    skips its new input."""
+    return (
+        stream_df.writeStream.foreachBatch(fn)
+        .outputMode(output_mode)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
+def write_counted(df: DataFrame, path: str) -> int:
+    """Overwrite ``path`` with ``df`` as parquet and return the number
+    of rows written, observed on that same write (``Dataset.observe``):
+    no persist to leak when the write raises, no separate count job.
+    Static overwrite mode guarantees the ``_SUCCESS`` marker that
+    ``batch_committed`` reads."""
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
+    obs = Observation()
+    (
+        df.observe(obs, F.count(F.lit(1)).alias("n"))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "static")
+        .parquet(path)
+    )
+    return obs.get["n"]
+
+
 def _index_has_data(path: str) -> bool:
     """True iff the Spark reader would find data under ``path``. The
     walk must skip '_'/'.'-prefixed directories (``_temporary``,
@@ -143,8 +188,7 @@ def run_neardup_ingest(
     id_col: str,
     index_path: str,
     out_path: str,
-    checkpoint: str | None = None,
-    available_now: bool = True,
+    checkpoint: str,
     on_batch: Callable[[int, int, int], Any] | None = None,
     min_frac: float = 0.0,
 ) -> StreamingQuery:
@@ -179,23 +223,20 @@ def run_neardup_ingest(
             batch_df, bands_fn, id_col, index_path, min_frac=min_frac
         )
         kept = kept.persist()  # two consumers: count/out + band semi-join
-        n_in = batch_df.count()
-        n_kept = kept.count()
-        # out first, index second: a crash between the two re-runs the
-        # batch (idx_dir missing), and rewriting out_dir is an
-        # overwrite of identical content — never a duplicate append
-        kept.write.mode("overwrite").parquet(out_dir)
-        kept_bands.write.mode("overwrite").parquet(idx_dir)
-        kept.unpersist()
+        try:
+            n_in = batch_df.count()
+            n_kept = kept.count()
+            # out first, index second: a crash between the two re-runs
+            # the batch (idx_dir missing), and rewriting out_dir is an
+            # overwrite of identical content — never a duplicate append
+            kept.write.mode("overwrite").parquet(out_dir)
+            kept_bands.write.mode("overwrite").parquet(idx_dir)
+        finally:
+            kept.unpersist()
         if on_batch is not None:
             on_batch(batch_id, n_in, n_kept)
 
-    writer = stream_df.writeStream.foreachBatch(_ingest).outputMode("update")
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return drain(stream_df, _ingest, checkpoint)
 
 
 # --- ingest-time SEMANTIC DECONTAMINATION (x136's streaming twin) ------
@@ -307,8 +348,7 @@ def run_decon_ingest(
     index_path: str,
     out_path: str,
     flagged_path: str,
-    checkpoint: str | None = None,
-    available_now: bool = True,
+    checkpoint: str,
     cos_floor: float | None = None,
     on_batch: Callable[[int, int, int], Any] | None = None,
 ) -> StreamingQuery:
@@ -358,19 +398,16 @@ def run_decon_ingest(
             batch_df, id_col, emb_col, index_path, cos_floor=cos_floor
         )
         flagged = flagged.persist()  # two consumers: count + write
-        n_in = batch_df.count()
-        n_flagged = flagged.count()
-        kept.write.mode("overwrite").parquet(out_dir)
-        flagged.write.mode("overwrite").parquet(flag_dir)
-        flagged.unpersist()
+        try:
+            n_in = batch_df.count()
+            n_flagged = flagged.count()
+            kept.write.mode("overwrite").parquet(out_dir)
+            flagged.write.mode("overwrite").parquet(flag_dir)
+        finally:
+            flagged.unpersist()
         with open(manifest, "w") as fh:
             json.dump({"batch_id": batch_id, "n_in": n_in}, fh)
         if on_batch is not None:
             on_batch(batch_id, n_in, n_flagged)
 
-    writer = stream_df.writeStream.foreachBatch(_ingest).outputMode("update")
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return drain(stream_df, _ingest, checkpoint)

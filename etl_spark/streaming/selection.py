@@ -29,7 +29,7 @@ import os
 from collections.abc import Callable
 from typing import Any
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
@@ -38,16 +38,14 @@ from etl_spark.extensions.resampling import (
     _bigram_bucket_matrix,
     _dsir_model,
 )
-from etl_spark.streaming.neardup import batch_committed
+from etl_spark.streaming.neardup import batch_committed, drain, write_counted
 
 
 def build_dsir_model(docs: DataFrame, model_path: str) -> int:
     """Estimate the importance model from a seen corpus of
     (doc_id, lang, text) rows and persist it: (b, lratio), at most
     ``DSIR_BUCKETS`` rows. Returns the row count written."""
-    model = _dsir_model(_bigram_bucket_matrix(docs))
-    model.write.mode("overwrite").parquet(model_path)
-    return model.sparkSession.read.parquet(model_path).count()
+    return write_counted(_dsir_model(_bigram_bucket_matrix(docs)), model_path)
 
 
 def dsir_score_batch(batch_df: DataFrame, model_df: DataFrame) -> DataFrame:
@@ -81,8 +79,7 @@ def run_dsir_gate(
     stream_df: DataFrame,
     model_path: str,
     out_path: str,
-    checkpoint: str | None = None,
-    available_now: bool = True,
+    checkpoint: str,
     on_batch: Callable[[int, int, int], Any] | None = None,
 ) -> StreamingQuery:
     """``foreachBatch`` sink: rows whose importance weight clears the
@@ -90,8 +87,8 @@ def run_dsir_gate(
     downstream resampling can weight by it); the rest are dropped.
     ``on_batch(batch_id, n_in, n_kept)`` is the observability hook.
     The model is loaded once, outside the batch loop; per batch the
-    scored frame is persisted so the batch source is scanned ONCE —
-    input count, kept count, and the write all read the cache."""
+    batch source is scanned ONCE — the input count and the kept count
+    are both observed on the write of the kept rows."""
     spark = stream_df.sparkSession
     model_df = spark.read.parquet(model_path)
 
@@ -99,31 +96,24 @@ def run_dsir_gate(
         out_dir = os.path.join(out_path, f"batch-{batch_id}")
         if batch_committed(out_dir):
             return  # replayed batch: commit marker on disk
-        scored = dsir_score_batch(batch_df, model_df).persist()
-        n_in = scored.count()
-        kept = scored.filter("selected").drop("selected")
-        n_kept = kept.count()
-        kept.write.mode("overwrite").parquet(out_dir)
-        scored.unpersist()
+        seen = Observation()
+        scored = dsir_score_batch(batch_df, model_df).observe(
+            seen, F.count(F.lit(1)).alias("n")
+        )
+        n_kept = write_counted(scored.filter("selected").drop("selected"), out_dir)
         if on_batch is not None:
-            on_batch(batch_id, n_in, n_kept)
+            on_batch(batch_id, seen.get["n"], n_kept)
 
-    writer = stream_df.writeStream.foreachBatch(_gate).outputMode("update")
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return drain(stream_df, _gate, checkpoint)
 
 
 def run_knn_probe(
     stream_df: DataFrame,
     index_path: str,
     out_path: str,
-    checkpoint: str | None = None,
+    checkpoint: str,
     k: int | None = None,
     nprobe: int | None = None,
-    available_now: bool = True,
     on_batch: Callable[[int, int, int], Any] | None = None,
     admit: bool = False,
     pq: bool = False,
@@ -175,11 +165,8 @@ def run_knn_probe(
             result = probe_fn(
                 batch_df, index_path, k=kk, nprobe=npb
             )
-            result = result.persist()
-            n_rows = result.count()
+            n_rows = write_counted(result, out_dir)
             n_q = batch_df.count()
-            result.write.mode("overwrite").parquet(out_dir)
-            result.unpersist()
             if on_batch is not None:
                 on_batch(batch_id, n_q, n_rows)
         if admit:
@@ -187,12 +174,7 @@ def run_knn_probe(
             # probe-committed/append-crashed window on replay
             _sim.ivf_index_append(batch_df, index_path, f"batch-{batch_id}")
 
-    writer = stream_df.writeStream.foreachBatch(_probe).outputMode("update")
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return drain(stream_df, _probe, checkpoint)
 
 
 def build_benchmark_index(bench_docs: DataFrame, index_path: str, n_buckets: int = 8) -> int:
@@ -211,14 +193,16 @@ def build_benchmark_index(bench_docs: DataFrame, index_path: str, n_buckets: int
         .withColumn("bucket", F.pmod(F.xxhash64("shingle"), F.lit(n_buckets)))
         .persist()
     )
-    n = sh.count()
-    (
-        sh.write.mode("overwrite")
-        .option("partitionOverwriteMode", "static")
-        .partitionBy("bucket")
-        .parquet(index_path)
-    )
-    sh.unpersist()
+    try:
+        n = sh.count()
+        (
+            sh.write.mode("overwrite")
+            .option("partitionOverwriteMode", "static")
+            .partitionBy("bucket")
+            .parquet(index_path)
+        )
+    finally:
+        sh.unpersist()
     return n
 
 
@@ -251,8 +235,7 @@ def run_decontam_gate(
     index_path: str,
     clean_path: str,
     quarantine_path: str,
-    checkpoint: str | None = None,
-    available_now: bool = True,
+    checkpoint: str,
     on_batch: Callable[[int, int, int], Any] | None = None,
 ) -> StreamingQuery:
     """Benchmark decontamination at the ingest front door — the x25
@@ -274,22 +257,19 @@ def run_decontam_gate(
         if batch_committed(clean_dir):
             return
         scored = decontam_score_batch(batch_df, index_df).persist()
-        n_in = scored.count()
-        bad = scored.filter("contaminated").drop("contaminated")
-        n_bad = bad.count()
-        bad.write.mode("overwrite").parquet(
-            os.path.join(quarantine_path, f"batch-{batch_id}")
-        )
-        scored.filter(~F.col("contaminated")).drop("contaminated", "n_shared").write.mode(
-            "overwrite"
-        ).parquet(clean_dir)
-        scored.unpersist()
+        try:
+            n_in = scored.count()
+            bad = scored.filter("contaminated").drop("contaminated")
+            n_bad = bad.count()
+            bad.write.mode("overwrite").parquet(
+                os.path.join(quarantine_path, f"batch-{batch_id}")
+            )
+            scored.filter(~F.col("contaminated")).drop(
+                "contaminated", "n_shared"
+            ).write.mode("overwrite").parquet(clean_dir)
+        finally:
+            scored.unpersist()
         if on_batch is not None:
             on_batch(batch_id, n_in, n_bad)
 
-    writer = stream_df.writeStream.foreachBatch(_gate).outputMode("update")
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return drain(stream_df, _gate, checkpoint)

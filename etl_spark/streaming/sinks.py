@@ -10,8 +10,8 @@ table current" goal runs incrementally:
   `upsert` (sources/writers.py). Checkpoint + idempotent-by-key merge
   gives effective exactly-once table state even when a batch replays
   after a crash — the replayed rows overwrite themselves.
-- `run_append_sink`: plain exactly-once append (file-sink semantics)
-  through the same writers, for append-only logs.
+- `run_txlog_sink`: exactly-once append into a transactional table —
+  its ledger records each batch id, so a replayed batch is skipped.
 - `interval_join`: watermarked stream-stream equi-join with an
   event-time interval bound — the enrichment join (clicks within an
   hour of the impression) that a polling loop can only fake with
@@ -31,8 +31,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from etl_spark.sources.writers import append as _append
 from etl_spark.sources.writers import upsert as _upsert
+from etl_spark.streaming.neardup import drain
 
 
 def run_merge_sink(
@@ -40,7 +40,6 @@ def run_merge_sink(
     table: str,
     keys: list[str],
     checkpoint: str,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Keep ``table`` current from a stream: per micro-batch, MERGE
     the delta on ``keys`` (insert-or-replace — the reference's
@@ -63,38 +62,7 @@ def run_merge_sink(
         _upsert(delta, table, keys)
         owner.catalog.refreshTable(table)
 
-    return (
-        stream_df.writeStream.foreachBatch(_merge)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=available_now)
-        .start()
-    )
-
-
-def run_append_sink(
-    stream_df: DataFrame,
-    table: str,
-    checkpoint: str,
-    available_now: bool = True,
-) -> StreamingQuery:
-    """Exactly-once append of each micro-batch into a managed table
-    (the S5 writer behind a stream)."""
-
-    owner = stream_df.sparkSession
-
-    def _append_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.isEmpty():
-            _append(batch_df, table)
-            owner.catalog.refreshTable(table)
-
-    return (
-        stream_df.writeStream.foreachBatch(_append_batch)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=available_now)
-        .start()
-    )
+    return drain(stream_df, _merge, checkpoint)
 
 
 def interval_join(
@@ -164,7 +132,6 @@ def run_txlog_sink(
     stream_df: DataFrame,
     tx_table,
     checkpoint: str,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Stream into a transactional table (`sources/txlog.TxTable`)
     with END-TO-END exactly-once: Structured Streaming's checkpoint
@@ -179,13 +146,7 @@ def run_txlog_sink(
         if not batch_df.isEmpty():
             tx_table.append_once(batch_df, batch_id)
 
-    return (
-        stream_df.writeStream.foreachBatch(_commit_batch)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=available_now)
-        .start()
-    )
+    return drain(stream_df, _commit_batch, checkpoint, output_mode="append")
 
 
 def run_validating_sink(
@@ -194,7 +155,6 @@ def run_validating_sink(
     out_path: str,
     dlq_path: str,
     checkpoint: str,
-    available_now: bool = True,
     on_batch=None,
 ) -> StreamingQuery:
     """Validation-split ingest with a DEAD-LETTER QUEUE: each
@@ -215,27 +175,23 @@ def run_validating_sink(
         valid, rejected = split_by_rules(batch_df, rules)
         valid = valid.persist()
         rejected = rejected.persist()
-        n_valid, n_rej = valid.count(), rejected.count()
-        if n_valid:
-            valid.write.mode("overwrite").parquet(
-                os.path.join(out_path, f"batch-{batch_id}")
-            )
-        if n_rej:
-            rejected.write.mode("overwrite").parquet(
-                os.path.join(dlq_path, f"batch-{batch_id}")
-            )
-        valid.unpersist()
-        rejected.unpersist()
+        try:
+            n_valid, n_rej = valid.count(), rejected.count()
+            if n_valid:
+                valid.write.mode("overwrite").parquet(
+                    os.path.join(out_path, f"batch-{batch_id}")
+                )
+            if n_rej:
+                rejected.write.mode("overwrite").parquet(
+                    os.path.join(dlq_path, f"batch-{batch_id}")
+                )
+        finally:
+            valid.unpersist()
+            rejected.unpersist()
         if on_batch is not None:
             on_batch(batch_id, n_valid, n_rej)
 
-    return (
-        stream_df.writeStream.foreachBatch(_ingest)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=available_now)
-        .start()
-    )
+    return drain(stream_df, _ingest, checkpoint, output_mode="append")
 
 
 def run_takedown_sink(
@@ -244,7 +200,6 @@ def run_takedown_sink(
     checkpoint: str,
     layout_paths: tuple[str, ...] = (),
     id_col: str = "doc_id",
-    available_now: bool = True,
     on_batch=None,
 ) -> StreamingQuery:
     """Streaming right-to-be-forgotten: each micro-batch is a set of
@@ -292,13 +247,7 @@ def run_takedown_sink(
         if on_batch is not None:
             on_batch(batch_id, ids, sorted(set(affected)), version)
 
-    return (
-        stream_df.writeStream.foreachBatch(_apply)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=available_now)
-        .start()
-    )
+    return drain(stream_df, _apply, checkpoint)
 
 
 def run_scd2_sink(
@@ -306,8 +255,7 @@ def run_scd2_sink(
     table_path: str,
     keys: list[str],
     ts_col: str,
-    checkpoint: str | None = None,
-    available_now: bool = True,
+    checkpoint: str,
     on_batch: Callable[[int, int], Any] | None = None,
 ) -> StreamingQuery:
     """Maintain a type-2 dimension from an observation stream — each
@@ -341,15 +289,12 @@ def run_scd2_sink(
             return
         dim = t.read(spark)
         new_dim = scd2_merge(dim, batch_df, keys, ts_col).persist()
-        n = new_dim.count()
-        t.overwrite_once(new_dim, batch_id)
-        new_dim.unpersist()
+        try:
+            n = new_dim.count()
+            t.overwrite_once(new_dim, batch_id)
+        finally:
+            new_dim.unpersist()
         if on_batch is not None:
             on_batch(batch_id, n)
 
-    writer = stream_df.writeStream.foreachBatch(_apply).outputMode("update")
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return drain(stream_df, _apply, checkpoint)

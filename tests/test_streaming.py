@@ -1181,6 +1181,7 @@ def test_distinct_monitor_merges_sketches_and_replays(spark, sf_dir, tmp_path):
     in_dir.mkdir()
     store = str(tmp_path / "kmv_store")
     ckpt = str(tmp_path / "kmv_ckpt")
+    reported = []
 
     def _drop(pred, name):
         pdf = events.filter(pred).toPandas()
@@ -1195,6 +1196,7 @@ def test_distinct_monitor_merges_sketches_and_replays(spark, sf_dir, tmp_path):
             store,
             k=K,
             checkpoint=checkpoint,
+            on_batch=lambda b, n: reported.append((b, n)),
         )
         q.awaitTermination(120)
 
@@ -1202,6 +1204,10 @@ def test_distinct_monitor_merges_sketches_and_replays(spark, sf_dir, tmp_path):
     _drain(ckpt)
     _drop(F.col("event_id") % 3 == 2, "part-1.parquet")
     _drain(ckpt)
+    # each reported count is the row count of the version it wrote
+    assert [b for b, _ in reported] == [0, 1]
+    for b, n in reported:
+        assert n == spark.read.parquet(f"{store}/v{b}").count()
 
     got = {
         r.grp: (r.kept, r.est_distinct)
@@ -1251,6 +1257,7 @@ def test_distinct_monitor_merges_sketches_and_replays(spark, sf_dir, tmp_path):
     versions_before = sorted(glob.glob(f"{store}/v*"))
     _drain(str(tmp_path / "kmv_ckpt_replay"))
     assert sorted(glob.glob(f"{store}/v*")) == versions_before
+    assert len(reported) == 2
     got2 = {
         r.grp: (r.kept, r.est_distinct)
         for r in distinct_estimates(spark, store, k=K).collect()
@@ -1282,6 +1289,7 @@ def test_weighted_sample_monitor_equals_batch_sample_and_replays(
     in_dir.mkdir()
     store = str(tmp_path / "ws_store")
     ckpt = str(tmp_path / "ws_ckpt")
+    reported = []
 
     def _drop(pred, name):
         import pyarrow as pa
@@ -1298,6 +1306,7 @@ def test_weighted_sample_monitor_equals_batch_sample_and_replays(
             store,
             k=k,
             checkpoint=checkpoint,
+            on_batch=lambda b, n: reported.append((b, n)),
         )
         q.awaitTermination(120)
 
@@ -1305,6 +1314,9 @@ def test_weighted_sample_monitor_equals_batch_sample_and_replays(
     _drain(ckpt)
     _drop(F.col("event_id") % 3 == 2, "part-1.parquet")
     _drain(ckpt)
+    assert [b for b, _ in reported] == [0, 1]
+    for b, n in reported:
+        assert n == spark.read.parquet(f"{store}/v{b}").count()
 
     import glob
 
@@ -1386,6 +1398,7 @@ def test_freq_monitor_merges_cms_and_replays(spark, sf_dir, tmp_path):
     in_dir.mkdir()
     store = str(tmp_path / "fm_store")
     ckpt = str(tmp_path / "fm_ckpt")
+    reported = []
 
     def _drop(pred, name):
         import pyarrow as pa
@@ -1400,13 +1413,21 @@ def test_freq_monitor_merges_cms_and_replays(spark, sf_dir, tmp_path):
         stream = spark.readStream.schema(
             "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT"
         ).parquet(str(in_dir))
-        q = run_freq_monitor(stream, store, checkpoint=checkpoint)
+        q = run_freq_monitor(
+            stream,
+            store,
+            checkpoint=checkpoint,
+            on_batch=lambda b, n: reported.append((b, n)),
+        )
         q.awaitTermination(120)
 
     _drop(F.col("doc_id") % 2 == 0, "part-0.parquet")
     _drain(ckpt)
     _drop(F.col("doc_id") % 2 == 1, "part-1.parquet")
     _drain(ckpt)
+    assert [b for b, _ in reported] == [0, 1]
+    for b, n in reported:
+        assert n == spark.read.parquet(f"{store}/v{b}").count()
 
     import glob
 
@@ -1459,6 +1480,7 @@ def test_profile_monitor_streams_and_replays(spark, sf_dir, tmp_path):
     store = str(tmp_path / "prof_store")
     ckpt = str(tmp_path / "prof_ckpt")
     rules = {"value_nonneg": "value >= 0"}
+    reported = []
 
     def _drop(pred, name):
         pq.write_table(
@@ -1467,7 +1489,11 @@ def test_profile_monitor_streams_and_replays(spark, sf_dir, tmp_path):
 
     def _drain(checkpoint):
         q = run_profile_monitor(
-            stream_events(spark, str(in_dir)), store, rules=rules, checkpoint=checkpoint
+            stream_events(spark, str(in_dir)),
+            store,
+            rules=rules,
+            checkpoint=checkpoint,
+            on_batch=lambda b, n: reported.append((b, n)),
         )
         q.awaitTermination(120)
 
@@ -1475,6 +1501,9 @@ def test_profile_monitor_streams_and_replays(spark, sf_dir, tmp_path):
     _drain(ckpt)
     _drop(F.col("event_id") % 3 == 2, "part-1.parquet")
     _drain(ckpt)
+    assert [b for b, _ in reported] == [0, 1]
+    for b, n in reported:
+        assert n == spark.read.parquet(f"{store}/v{b}").count()
 
     got = {
         (r["item"], r["metric"]): r["value"]
