@@ -9,9 +9,9 @@ two routine jobs are:
 
 - `compact_table`: rewrite a table (or only its small-file
   partitions) into target-sized files. Partitioned tables compact
-  per-partition via dynamic partition overwrite — untouched
-  partitions keep their files byte-identical; unpartitioned tables
-  rewrite through the same staged-overwrite path the DML uses.
+  per-partition via dynamic partition overwrite (untouched partitions
+  keep their files; not atomic for readers); unpartitioned tables
+  commit through the DML's location swap, `writers._commit`.
 - `analyze_table`: `ANALYZE TABLE ... COMPUTE STATISTICS` (+ FOR
   COLUMNS) so Catalyst's cost-based features (broadcast selection,
   join reordering) see real row counts instead of file-size guesses.
@@ -22,13 +22,14 @@ from __future__ import annotations
 import math
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
+from pyspark.sql import functions as F
 
 from etl_spark.sources.writers import (
+    _commit,
+    _describe,
     _overwrite_partitions,
-    _overwrite_self,
     _partition_columns,
-    _partition_predicate,
 )
 
 DEFAULT_TARGET_FILE_MB = 128
@@ -36,12 +37,7 @@ DEFAULT_TARGET_FILE_MB = 128
 
 def table_location(spark: SparkSession, table: str) -> str:
     """Filesystem location of a managed/external table."""
-    row = next(
-        r
-        for r in spark.sql(f"DESCRIBE FORMATTED {table}").collect()
-        if r.col_name.strip() == "Location"
-    )
-    return row.data_type.removeprefix("file:")
+    return _describe(spark, table)["Location"].removeprefix("file:")
 
 
 def file_inventory(spark: SparkSession, table: str) -> dict[str, list[tuple[str, int]]]:
@@ -74,7 +70,7 @@ def compact_table(
     Partitioned: only partitions with ≥ ``min_files`` files (or any
     file under half the target) are rewritten — a dynamic partition
     overwrite of exactly those partitions; everything else is left
-    byte-identical. Unpartitioned: one staged rewrite into
+    byte-identical. Unpartitioned: one `_commit` of
     ceil(bytes/target) files. Returns
     {"partitions_compacted": n, "files_before": n, "files_after": n}.
 
@@ -93,6 +89,12 @@ def compact_table(
     pcols = _partition_columns(spark, table)
     df = spark.table(table)
 
+    def result(n_compacted: int) -> dict:
+        after = file_inventory(spark, table) if n_compacted else inv
+        files_after = sum(len(v) for v in after.values())
+        return {"partitions_compacted": n_compacted,
+                "files_before": files_before, "files_after": files_after}
+
     if cluster_by and pcols:
         raise ValueError(
             "cluster_by is supported for unpartitioned tables only "
@@ -102,35 +104,20 @@ def compact_table(
         total = sum(sz for v in inv.values() for _, sz in v)
         n_out = max(1, math.ceil(total / target))
         if files_before <= max(n_out, min_files - 1):
-            return {
-                "partitions_compacted": 0,
-                "files_before": files_before,
-                "files_after": files_before,
-            }
+            return result(0)
         if cluster_by:
-            from pyspark.sql import functions as F
-
             from etl_spark.sources.zonemap import zorder_column
 
-            def relayout(staged: DataFrame) -> DataFrame:
-                return (
-                    staged.withColumn("__zv", zorder_column(staged, cluster_by))
-                    .repartitionByRange(n_out, F.col("__zv"))
-                    .sortWithinPartitions("__zv")
-                    .drop("__zv")
-                )
+            shaped = (
+                df.withColumn("__zv", zorder_column(df, cluster_by))
+                .repartitionByRange(n_out, F.col("__zv"))
+                .sortWithinPartitions("__zv")
+                .drop("__zv")
+            )
         else:
-
-            def relayout(staged: DataFrame) -> DataFrame:
-                return staged.repartition(n_out)
-
-        _overwrite_self(df, table, relayout=relayout)
-        after = sum(len(v) for v in file_inventory(spark, table).values())
-        return {
-            "partitions_compacted": 1,
-            "files_before": files_before,
-            "files_after": after,
-        }
+            shaped = df.repartition(n_out)
+        _commit(shaped, table)
+        return result(1)
 
     # partitioned: pick partitions worth compacting
     from urllib.parse import unquote
@@ -149,15 +136,9 @@ def compact_table(
             }
             needs.append(spec)
     if not needs:
-        return {
-            "partitions_compacted": 0,
-            "files_before": files_before,
-            "files_after": files_before,
-        }
+        return result(0)
     # compare with literals cast to the COLUMN's type (a cast on the
     # partition column itself would defeat partition pruning)
-    from pyspark.sql import functions as F
-
     ptypes = {f.name: f.dataType for f in df.schema.fields if f.name in pcols}
     rows = [{c: spec[c] for c in pcols} for spec in needs]
     pred = None
@@ -169,12 +150,7 @@ def compact_table(
     affected = df.filter(pred)
     touched = affected.select(*pcols).distinct().collect()
     _overwrite_partitions(affected, table, pcols, touched)
-    after = sum(len(v) for v in file_inventory(spark, table).values())
-    return {
-        "partitions_compacted": len(rows),
-        "files_before": files_before,
-        "files_after": after,
-    }
+    return result(len(rows))
 
 
 def analyze_table(

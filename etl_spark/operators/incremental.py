@@ -8,8 +8,8 @@ it is simply impossible.
 
 `refresh_rollup` is the scale-correct form: the derived table is
 hive-partitioned on a time bucket, and a refresh recomputes ONLY the
-partitions touched by the incoming delta, replacing them atomically
-via dynamic partition overwrite (sources/writers.partitioned_save).
+partitions touched by the incoming delta by dynamic partition overwrite
+(sources/writers.partitioned_save; not atomic for a concurrent reader).
 Cost scales with the size of the changed partitions, not the table.
 The equality contract — incremental result == full recompute — is
 asserted in tests/test_scale.py.

@@ -36,6 +36,9 @@ from pyspark.sql import DataFrame, SparkSession
 #    again. Metaspace was 218 MB against 200 MB. The conf is static: it is
 #    read when the JVM's first SparkContext starts, so a session built
 #    elsewhere before get_spark keeps Spark's 100.
+#  - filesourceTableRelationCacheSize=0: every query re-resolves a table's
+#    location, so it reads what another session's `writers._commit` swapped
+#    in. Static: a context built before get_spark needs REFRESH TABLE.
 _DEFAULTS = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
@@ -48,6 +51,7 @@ _DEFAULTS = {
     "spark.ui.enabled": "false",
     "spark.sql.shuffle.partitions": "32",
     "spark.sql.codegen.cache.maxEntries": "4096",
+    "spark.sql.filesourceTableRelationCacheSize": "0",
 }
 
 

@@ -1,5 +1,5 @@
 """Table writers — the reference's load patterns re-expressed as
-atomic Spark writes (SURVEY.md §2.1 S5–S7 and §2.9 DML).
+Spark writes (SURVEY.md §2.1 S5–S7 and §2.9 DML).
 
 Reference behaviors reproduced (cited):
 
@@ -7,9 +7,8 @@ Reference behaviors reproduced (cited):
   (web_scheduler.py:4376-4487) → `df.write.mode("append")`.
 - **truncate-and-load** (S6): `DELETE FROM t` then `to_sql(...,
   if_exists='append')` (uploads/excel_to_db.py:53-77). The reference's
-  two-step is non-atomic — readers see an empty table mid-load; Spark's
-  `INSERT OVERWRITE` / `mode("overwrite")` commits atomically, a
-  deliberate documented improvement (SURVEY.md §7.4).
+  two-step is non-atomic — readers see an empty table mid-load. Here
+  the load is one `_commit` (SURVEY.md §7.4).
 - **auto-create** (S7): `to_sql` creating the table from DataFrame
   dtypes (uploads/excel_to_db.py:74) → `saveAsTable` on first write.
 - **upsert** (`INSERT OR REPLACE`, web_scheduler.py:4510-4513): with no
@@ -17,6 +16,10 @@ Reference behaviors reproduced (cited):
   union-overwrite. At 100 TB you'd use Delta/Iceberg `MERGE INTO`
   (partition-pruned, file-level rewrite); the anti-join form here has
   the same one-shuffle cost profile keyed on the merge keys.
+
+Every rewrite of an existing UNPARTITIONED table is one `_commit`: a
+reader sees the old rows or the new ones. Partitioned tables (dynamic
+partition overwrite) and schema changes are NOT atomic for readers.
 
 All writers target **managed tables** (the session's
 `spark.sql.warehouse.dir`) so the DDL/DML surface (§2.9) operates on
@@ -27,6 +30,8 @@ from __future__ import annotations
 
 import contextlib
 import threading
+import time
+import uuid
 from collections.abc import Callable, Iterator
 
 from pyspark import InheritableThread
@@ -37,11 +42,10 @@ def ensure_table(df: DataFrame, table: str) -> bool:
     """Create ``table`` from ``df``'s schema if absent (S7 auto-create,
     uploads/excel_to_db.py:74 — "如果目标表不存在，程序会自动创建").
     Returns True if the table was created."""
-    spark = df.sparkSession
-    if spark.catalog.tableExists(table):
+    if df.sparkSession.catalog.tableExists(table):
         return False
     # empty write materializes schema + table metadata without data
-    df.limit(0).write.format("parquet").saveAsTable(table)
+    _commit(df.limit(0), table)
     return True
 
 
@@ -50,16 +54,12 @@ def append(df: DataFrame, table: str) -> None:
     Column order is aligned by name (`unionByName` semantics) — the
     reference aligns by explicit column list (web_scheduler.py:4413)."""
     spark = df.sparkSession
-    created = ensure_table(df, table)
-    target_cols = spark.table(table).columns if not created else df.columns
-    writer = df.select(*target_cols).write.format("parquet").mode("append")
-    if not created:
-        n_buckets, bucket_cols, sort_cols = _bucket_spec(spark, table)
-        if n_buckets:  # appends must match the table's bucket layout
-            writer = writer.bucketBy(n_buckets, *bucket_cols)
-            if sort_cols:
-                writer = writer.sortBy(*sort_cols)
-    writer.saveAsTable(table)
+    if not spark.catalog.tableExists(table):  # S7: the first write creates it
+        _commit(df, table)
+        return
+    writer = df.select(*spark.table(table).columns).write.format("parquet").mode("append")
+    # appends must match the table's bucket layout
+    _bucketed(writer, _bucket_spec(spark, table)).saveAsTable(table)
     spark.catalog.refreshTable(table)
 
 
@@ -174,9 +174,8 @@ def append_evolve(df: DataFrame, table: str) -> list[str]:
     from pyspark.sql import functions as F
 
     spark = df.sparkSession
-    if ensure_table(df, table):
-        df.write.format("parquet").mode("append").saveAsTable(table)
-        spark.catalog.refreshTable(table)
+    if not spark.catalog.tableExists(table):
+        _commit(df, table)
         return []
     existing = {f.name: f.dataType.simpleString() for f in spark.table(table).schema}
     new_fields = [f for f in df.schema if f.name not in existing]
@@ -192,26 +191,16 @@ def append_evolve(df: DataFrame, table: str) -> list[str]:
             for c in target_cols
         ]
     )
-    aligned.write.format("parquet").mode("append").saveAsTable(table)
-    spark.catalog.refreshTable(table)
+    append(aligned, table)
     return [f.name for f in new_fields]
 
 
 def truncate_load(df: DataFrame, table: str) -> None:
-    """S6 truncate-and-load full refresh, atomically: one overwrite
-    commit instead of the reference's DELETE-then-append window
-    (uploads/excel_to_db.py:70-74). An existing table's bucket/sort
-    layout survives the refresh."""
-    spark = df.sparkSession
-    writer = df.write.format("parquet").mode("overwrite")
-    if spark.catalog.tableExists(table):
-        n_buckets, bucket_cols, sort_cols = _bucket_spec(spark, table)
-        if n_buckets:
-            writer = writer.bucketBy(n_buckets, *bucket_cols)
-            if sort_cols:
-                writer = writer.sortBy(*sort_cols)
-    writer.saveAsTable(table)
-    spark.catalog.refreshTable(table)
+    """S6 truncate-and-load full refresh as one `_commit`: a reader sees
+    the old rows or the new ones, never the reference's empty table
+    mid-load (uploads/excel_to_db.py:70-74). The bucket/sort layout
+    survives; a new schema or a partitioned table is not atomic."""
+    _commit(df, table)
 
 
 @contextlib.contextmanager
@@ -275,9 +264,8 @@ def partitioned_save(
                 table, overwrite=(mode == "overwrite")
             )
         else:
-            df.write.format("parquet").mode(mode).partitionBy(
-                *partition_cols
-            ).saveAsTable(table)
+            _sweep(spark, _default_path(spark, table), keep=lambda name: False)
+            df.write.format("parquet").partitionBy(*partition_cols).saveAsTable(table)
 
 
 def bucketed_save(
@@ -296,12 +284,7 @@ def bucketed_save(
     is the difference between an exchange of the whole fact table and
     none at all; pick n_buckets so each bucket is a few hundred MB.
     (tests/test_scale.py asserts the no-Exchange plan.)"""
-    writer = df.write.format("parquet").mode("overwrite").bucketBy(
-        n_buckets, *bucket_keys
-    )
-    if sort_keys:
-        writer = writer.sortBy(*sort_keys)
-    writer.saveAsTable(table)
+    _commit(df, table, bucket=(n_buckets, list(bucket_keys), list(sort_keys or [])))
 
 
 def sorted_save(
@@ -319,10 +302,7 @@ def sorted_save(
     filter to 1/N of the bytes). Complements `bucketed_save` (join
     co-location) and `partitioned_save` (directory pruning)."""
     out = df.repartitionByRange(*([n_files] if n_files else []), *sort_cols)
-    out.sortWithinPartitions(*sort_cols).write.format("parquet").mode(
-        "overwrite"
-    ).saveAsTable(table)
-    df.sparkSession.catalog.refreshTable(table)
+    _commit(out.sortWithinPartitions(*sort_cols), table, bucket=_UNBUCKETED)
 
 
 def _partition_columns(spark: SparkSession, table: str) -> list[str]:
@@ -389,11 +369,11 @@ def upsert(df: DataFrame, table: str, keys: list[str]) -> None:
     10k-partition table rewrites exactly one partition, not the table.
     Partitions whose rows all moved elsewhere are dropped explicitly
     (dynamic overwrite only replaces partitions present in the
-    output). Unpartitioned tables fall back to the full staged
-    rewrite. On Delta/Iceberg this whole function is `MERGE INTO`."""
+    output). Unpartitioned tables are rewritten whole by one
+    `_commit`. On Delta/Iceberg this whole function is `MERGE INTO`."""
     spark = df.sparkSession
-    if ensure_table(df, table):
-        df.write.format("parquet").mode("append").saveAsTable(table)
+    if not spark.catalog.tableExists(table):
+        _commit(df, table)
         return
     target = spark.table(table)
     pcols = _partition_columns(spark, table)
@@ -428,7 +408,7 @@ def upsert(df: DataFrame, table: str, keys: list[str]) -> None:
         merged = target.join(df.select(*keys), on=keys, how="left_anti").unionByName(
             df.select(*target.columns)
         )
-        _overwrite_self(merged, table)
+        _commit(merged, table)
 
 
 def delete_where(spark: SparkSession, table: str, condition: str) -> int:
@@ -454,8 +434,7 @@ def delete_where(spark: SparkSession, table: str, condition: str) -> int:
         kept = target.filter(_partition_predicate(touched, pcols)).filter(~cond_true)
         _overwrite_partitions(kept, table, pcols, touched)
     else:
-        kept = target.filter(~cond_true)
-        _overwrite_self(kept, table)
+        _commit(target.filter(~cond_true), table)
     return n_deleted
 
 
@@ -469,9 +448,8 @@ def update_set(
     predicates leave the row untouched, per SQL). Returns rows
     updated.
 
-    Partition-scoped when the table is partitioned AND no assignment
-    targets a partition column (rows can't migrate partitions); else
-    full staged rewrite."""
+    Partition-scoped when the table is partitioned (all partitions when
+    an assignment moves rows between them); else one `_commit`."""
     from pyspark.sql import functions as F
 
     target = spark.table(table)
@@ -491,12 +469,13 @@ def update_set(
             ]
         )
 
-    if pcols and not (set(assignments) & set(pcols)):
-        touched = target.filter(cond).select(*pcols).distinct().collect()
+    if pcols:
+        moves = bool(set(assignments) & set(pcols))
+        touched = (target if moves else target.filter(cond)).select(*pcols).distinct().collect()
         updated = apply_set(target.filter(_partition_predicate(touched, pcols)))
         _overwrite_partitions(updated, table, pcols, touched)
     else:
-        _overwrite_self(apply_set(target), table)
+        _commit(apply_set(target), table)
     return n
 
 
@@ -511,14 +490,24 @@ def _staging_name(table: str) -> str:
     return f"{db}.{stage}" if db else stage
 
 
-def _bucket_spec(spark: SparkSession, table: str) -> tuple[int, list[str], list[str]]:
-    """(num_buckets, bucket_cols, sort_cols) of a catalog table —
-    (0, [], []) when unbucketed. Parsed from DESCRIBE FORMATTED."""
-    rows = {r.col_name.strip(): r.data_type for r in
+Bucket = tuple[int, list[str], list[str]]  # (num_buckets, bucket_cols, sort_cols)
+_UNBUCKETED: Bucket = (0, [], [])
+_VERSIONS = ".versions"  # version directories: <default path>.versions/<name>
+
+
+def _describe(spark: SparkSession, table: str) -> dict[str, str]:
+    """DESCRIBE FORMATTED of a catalog table as {row name: value}."""
+    return {r.col_name.strip(): r.data_type for r in
             spark.sql(f"DESCRIBE FORMATTED {table}").collect()}
+
+
+def _bucket_spec(spark: SparkSession, table: str, info: dict[str, str] | None = None) -> Bucket:
+    """(num_buckets, bucket_cols, sort_cols) of a catalog table —
+    (0, [], []) when unbucketed — from its ``_describe`` ``info``."""
+    rows = _describe(spark, table) if info is None else info
     n = rows.get("Num Buckets")
     if not n:
-        return 0, [], []
+        return _UNBUCKETED
 
     def cols(v: str | None) -> list[str]:
         v = (v or "").strip().strip("[]")
@@ -527,46 +516,80 @@ def _bucket_spec(spark: SparkSession, table: str) -> tuple[int, list[str], list[
     return int(n), cols(rows.get("Bucket Columns")), cols(rows.get("Sort Columns"))
 
 
-def _overwrite_self(
-    df: DataFrame,
-    table: str,
-    relayout: Callable[[DataFrame], DataFrame] | None = None,
-) -> None:
-    """Overwrite ``table`` with a plan that reads from it: stage the
-    rows into a temp table, then overwrite from the staged copy —
-    PRESERVING the table's bucketing/sort layout (a plain overwrite
-    would silently drop the bucket spec, and with it every
-    zero-shuffle join downstream).
+def _bucketed(writer, bucket: Bucket):
+    """``writer`` laid out by ``bucket``."""
+    n_buckets, bucket_cols, sort_cols = bucket
+    if n_buckets:
+        writer = writer.bucketBy(n_buckets, *bucket_cols)
+        if sort_cols:
+            writer = writer.sortBy(*sort_cols)
+    return writer
 
-    ``relayout`` is applied to the staged copy before the final write.
-    A file layout must be made there: re-reading the staged table
-    packs its file splits into new partitions, so partitioning done
-    before the staging hop does not survive into the table's files.
 
-    On Delta/Iceberg this whole helper disappears (native DML with
-    snapshot isolation); parquet managed tables need the staging hop
-    because the lazy plan would otherwise read partially-deleted
-    files mid-overwrite."""
+def _default_path(spark: SparkSession, table: str) -> str:
+    """Where the catalog puts ``table`` when it is created managed."""
+    state = spark._jsparkSession.sessionState()
+    ident = state.sqlParser().parseTableIdentifier(table)
+    return state.catalog().defaultTablePath(ident).toString()
+
+
+def _sweep(spark: SparkSession, default: str, keep: Callable[[str], bool]) -> None:
+    """Delete the table's data directories whose name ``keep`` rejects:
+    versions, and the default path as "". Only once a version exists."""
+    path = spark._jvm.org.apache.hadoop.fs.Path
+    root = path(default + _VERSIONS)
+    fs = root.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    if fs.exists(root):
+        versions = [(st.getPath().getName(), st.getPath()) for st in fs.listStatus(root)]
+        for name, p in [("", path(default)), *versions]:
+            if not keep(name):
+                fs.delete(p, True)
+
+
+def _commit(df: DataFrame, table: str, bucket: Bucket | None = None) -> None:
+    """Make ``df`` (which may read ``table``) the table's contents: (1)
+    write it once into ``<default path>.versions/<ns time>_<id>``, laid
+    out by ``bucket`` (default: the table's own), through a transient
+    external table as ``save`` cannot bucket; (2) ``ALTER TABLE … SET
+    LOCATION`` there and ``refreshTable``; (3) delete the default path and
+    the versions older than the one replaced, which readers may still
+    scan. A failure before (2) deletes the new version. A new table is a
+    plain CTAS, after sweeping what a dropped one left (``DROP TABLE``
+    deletes only the current version). A swap keeps the catalog's schema,
+    buckets and partitioning: if one differs, the table is dropped and
+    re-created empty before (2), which is not atomic."""
     spark = df.sparkSession
-    n_buckets, bucket_cols, sort_cols = _bucket_spec(spark, table)
-    staging = _staging_name(table)
-    df.write.format("parquet").mode("overwrite").saveAsTable(staging)
+    default = _default_path(spark, table)
+    if not spark.catalog.tableExists(table):
+        _sweep(spark, default, keep=lambda name: False)
+        _bucketed(df.write.format("parquet"), bucket or _UNBUCKETED).saveAsTable(table)
+        return
+    info = _describe(spark, table)
+    current = _bucket_spec(spark, table, info)
+    bucket = current if bucket is None else bucket
+    name = f"{time.time_ns():020d}_{uuid.uuid4().hex[:8]}"
+    version = f"{default}{_VERSIONS}/{name}"
+    transient = _staging_name(table)
+    previous = info["Location"]
     try:
-        staged = spark.table(staging)
-        if relayout is not None:
-            staged = relayout(staged)
-        writer = staged.write.format("parquet").mode("overwrite")
-        if n_buckets:
-            writer = writer.bucketBy(n_buckets, *bucket_cols)
-            if sort_cols:
-                writer = writer.sortBy(*sort_cols)
-        writer.saveAsTable(table)
-        # any cached plan/file-listing for the table now points at
-        # replaced files — refresh so OTHER sessions/plans (e.g. the
-        # main session after a foreachBatch clone ran this DML) reread
-        spark.catalog.refreshTable(table)
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {staging}")
+        writer = df.write.format("parquet").option("path", version)
+        _bucketed(writer, bucket).saveAsTable(transient)
+        spark.sql(f"DROP TABLE {transient}")
+        reshape = bucket != current or "# Partition Information" in info
+        if reshape or df.schema.simpleString() != spark.table(table).schema.simpleString():
+            spark.sql(f"DROP TABLE {table}")
+            _sweep(spark, default, keep=lambda n: n == name)
+            _bucketed(df.limit(0).write.format("parquet"), bucket).saveAsTable(table)
+            previous = default
+        spark.sql(f"ALTER TABLE {table} SET LOCATION {_sql_literal(version)}")
+    except BaseException:
+        spark.sql(f"DROP TABLE IF EXISTS {transient}")
+        _sweep(spark, default, keep=lambda n: n != name)
+        raise
+    spark.catalog.refreshTable(table)
+    root, _, prev_name = previous.rpartition("/")
+    if root == default + _VERSIONS:  # else the default path is the one replaced
+        _sweep(spark, default, keep=lambda n: n >= prev_name)
 
 
 def _overwrite_partitions(
@@ -575,11 +598,11 @@ def _overwrite_partitions(
     """Commit ``df`` (the post-DML contents of the ``touched``
     partitions) into ``table``, replacing ONLY those partitions:
 
-    1. stage ``df`` (it reads from ``table`` — same self-read hazard
-       as `_overwrite_self`, but the staged volume is just the
-       affected partitions, not the table);
+    1. stage ``df`` (it reads from ``table``, and the insert below
+       would delete files the lazy plan still has to read; the staged
+       volume is just the affected partitions, not the table);
     2. dynamic-partition-overwrite insertInto — partitions present in
-       the staged output are atomically swapped, all others untouched;
+       the staged output are replaced, not atomically; others untouched;
     3. touched partitions ABSENT from the output (every row deleted /
        moved away) are dropped via ALTER TABLE ... DROP PARTITION,
        since dynamic overwrite cannot express "replace with nothing".
@@ -677,7 +700,4 @@ def zorder_save(
     key = zorder_key(df, x_col, y_col, bits=bits)
     out = df.withColumn("_zkey", key)
     out = out.repartitionByRange(*([n_files] if n_files else []), "_zkey")
-    out.sortWithinPartitions("_zkey").drop("_zkey").write.format(
-        "parquet"
-    ).mode("overwrite").saveAsTable(table)
-    df.sparkSession.catalog.refreshTable(table)
+    _commit(out.sortWithinPartitions("_zkey").drop("_zkey"), table, bucket=_UNBUCKETED)

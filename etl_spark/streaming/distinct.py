@@ -32,7 +32,7 @@ import shutil
 from collections.abc import Callable
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
@@ -117,14 +117,14 @@ def run_distinct_ingest(
         d = os.path.join(state_path, f"batch-{batch_id}")
         if batch_committed(d):
             return
+        seen = Observation()  # the batch's row count, taken on the delta write
+        batch = batch_df.observe(seen, F.count(F.lit(1)).alias("n"))
         delta = bitmap_chunks(
-            batch_df.select(F.to_date("ts").alias("day"), "user_id"),
-            ["day"],
-            "user_id",
+            batch.select(F.to_date("ts").alias("day"), "user_id"), ["day"], "user_id"
         )
         delta.write.mode("overwrite").parquet(d)
         if on_batch is not None:
-            on_batch(batch_id, batch_df.count())
+            on_batch(batch_id, seen.get["n"])
 
     return drain(stream_df, _ingest, checkpoint)
 
@@ -220,14 +220,14 @@ def run_hll_ingest(
         d = os.path.join(state_path, f"batch-{batch_id}")
         if batch_committed(d):
             return
+        seen = Observation()  # the batch's row count, taken on the delta write
+        batch = batch_df.observe(seen, F.count(F.lit(1)).alias("n"))
         delta = hll_registers(
-            batch_df.select(F.to_date("ts").alias("day"), "user_id"),
-            ["day"],
-            "user_id",
+            batch.select(F.to_date("ts").alias("day"), "user_id"), ["day"], "user_id"
         )
         delta.write.mode("overwrite").parquet(d)
         if on_batch is not None:
-            on_batch(batch_id, batch_df.count())
+            on_batch(batch_id, seen.get["n"])
 
     return drain(stream_df, _ingest, checkpoint)
 

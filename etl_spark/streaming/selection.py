@@ -256,20 +256,20 @@ def run_decontam_gate(
         clean_dir = os.path.join(clean_path, f"batch-{batch_id}")
         if batch_committed(clean_dir):
             return
+        # persisted, or the shingle join runs per write (12 jobs, not 9)
         scored = decontam_score_batch(batch_df, index_df).persist()
         try:
-            n_in = scored.count()
-            bad = scored.filter("contaminated").drop("contaminated")
-            n_bad = bad.count()
-            bad.write.mode("overwrite").parquet(
-                os.path.join(quarantine_path, f"batch-{batch_id}")
+            n_bad = write_counted(
+                scored.filter("contaminated").drop("contaminated"),
+                os.path.join(quarantine_path, f"batch-{batch_id}"),
             )
-            scored.filter(~F.col("contaminated")).drop(
-                "contaminated", "n_shared"
-            ).write.mode("overwrite").parquet(clean_dir)
+            n_clean = write_counted(
+                scored.filter(~F.col("contaminated")).drop("contaminated", "n_shared"),
+                clean_dir,
+            )
         finally:
             scored.unpersist()
         if on_batch is not None:
-            on_batch(batch_id, n_in, n_bad)
+            on_batch(batch_id, n_bad + n_clean, n_bad)
 
     return drain(stream_df, _gate, checkpoint)

@@ -27,6 +27,9 @@ only the watermark horizon in state.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+from typing import Any
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
@@ -44,12 +47,9 @@ def run_merge_sink(
     """Keep ``table`` current from a stream: per micro-batch, MERGE
     the delta on ``keys`` (insert-or-replace — the reference's
     `INSERT OR REPLACE` semantics, web_scheduler.py:4510-4513, driven
-    by a stream instead of a cron rerun). Idempotent on replay."""
-
-    # foreachBatch runs against a CLONED session; DML that replaces
-    # files must also invalidate the OWNING session's relation cache,
-    # or its next read of the table hits deleted part-files
-    owner = stream_df.sparkSession
+    by a stream instead of a cron rerun). Idempotent on replay. The
+    owning session sees each merge made in foreachBatch's clone: it keeps
+    no resolved-relation cache (``session._DEFAULTS``)."""
 
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -60,7 +60,6 @@ def run_merge_sink(
         # present, else arbitrary-but-single via drop_duplicates.
         delta = batch_df.dropDuplicates(keys)
         _upsert(delta, table, keys)
-        owner.catalog.refreshTable(table)
 
     return drain(stream_df, _merge, checkpoint)
 

@@ -107,10 +107,10 @@ def test_bucketed_join_has_no_shuffle(spark, sf_dir):
     try:
         # force a non-broadcast join so the shuffle question is real
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        joined = spark.table("b_lineitem").join(
-            spark.table("b_orders"),
-            spark.table("b_lineitem").l_orderkey == spark.table("b_orders").o_orderkey,
-        )
+        # each spark.table() call resolves the table afresh (the session
+        # keeps no relation cache), so bind each side once
+        b_li, b_ord = spark.table("b_lineitem"), spark.table("b_orders")
+        joined = b_li.join(b_ord, b_li.l_orderkey == b_ord.o_orderkey)
         plan = formatted_plan(joined)
         assert node_count(plan, "Exchange") == 0, plan
         assert joined.count() == load(spark, sf_dir, "lineitem").count()
