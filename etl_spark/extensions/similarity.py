@@ -1688,14 +1688,15 @@ def _committed_delta_dirs(path: str, tier: str) -> list[str]:
     A delta counts only once its CELLS tier carries Spark's _SUCCESS
     marker — the cells write is last in ``ivf_index_append``, so its
     marker commits the whole batch (codes included); a crashed partial
-    append is invisible and gets overwritten on replay. Local-FS
-    os.path convention, shared with streaming's ``batch_committed``."""
+    append is invisible and gets overwritten on replay."""
+    from etl_spark.streaming.neardup import batch_committed
+
     droot = os.path.join(path, "delta")
     if not os.path.isdir(droot):
         return []
     out = []
     for name in sorted(os.listdir(droot)):
-        if os.path.exists(os.path.join(droot, name, "cells", "_SUCCESS")):
+        if batch_committed(os.path.join(droot, name, "cells")):
             d = os.path.join(droot, name, tier)
             if os.path.isdir(d):
                 out.append(d)
@@ -1734,9 +1735,11 @@ def ivf_index_append(batch_df: DataFrame, path: str, name: str) -> int:
     skipped — so a replayed micro-batch appends nothing twice and a
     crashed partial append is overwritten. Returns rows appended (0
     on replay-skip)."""
+    from etl_spark.streaming.neardup import batch_committed
+
     spark = batch_df.sparkSession
     root = os.path.join(path, "delta", name)
-    if os.path.exists(os.path.join(root, "cells", "_SUCCESS")):
+    if batch_committed(os.path.join(root, "cells")):
         return 0
     crows = [
         (r[0], r[1]) for r in scan_parquet(spark, f"{path}/centroids").collect()

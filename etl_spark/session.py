@@ -52,6 +52,9 @@ _DEFAULTS = {
     "spark.sql.shuffle.partitions": "32",
     "spark.sql.codegen.cache.maxEntries": "4096",
     "spark.sql.filesourceTableRelationCacheSize": "0",
+    # INT64 TIMESTAMP(NANOS) parquet columns read as raw int64 nanos
+    # (Spark refuses them otherwise); no other column type changes
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
 }
 
 

@@ -23,6 +23,11 @@ INDEX at build time (xxhash64 of int vs bigint differ; a probe with a
 python int against a string column would silently keep nothing).
 Files absent from the index are NEVER skipped (the zonemap staleness
 rule: absence of evidence keeps the file).
+
+Storage: the index is a ``TxTable`` (sources/txlog.py), kept the way
+the zone map is — a full build is an ``overwrite`` commit, a refresh a
+``rewrite`` of the snapshot it read, and probes read the committed
+snapshot through the log.
 """
 
 from __future__ import annotations
@@ -30,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_spark.sources.txlog import TxTable
 from etl_spark.tables import scan_parquet
 
 # m = bit positions per (file, column) filter; k = probes per value.
@@ -118,9 +124,8 @@ def write_bloom_index(
     m_bits: int = DEFAULT_M_BITS,
     k: int = DEFAULT_K,
 ) -> None:
-    build_bloom_index(spark, table_path, cols, m_bits, k).write.mode(
-        "overwrite"
-    ).parquet(index_path)
+    """Full build, committed as an ``overwrite`` of the index's TxTable."""
+    TxTable(index_path).overwrite(build_bloom_index(spark, table_path, cols, m_bits, k))
 
 
 def _bloom_probe(
@@ -152,7 +157,7 @@ def _bloom_probe(
         # instead of failing — and SQL equality never matches NULL
         # anyway. Point callers at IS NULL semantics.
         raise ValueError("bloom probe value must not be NULL (use IS NULL)")
-    idx = scan_parquet(spark, index_path).filter(F.col("col") == col)
+    idx = TxTable(index_path).read(spark).filter(F.col("col") == col)
     geoms = idx.select("dtype", "m_bits", "k").distinct().collect()
     if not geoms:
         raise ValueError(
@@ -260,14 +265,14 @@ def bloom_refresh(
     files: list[str] | None = None,
 ) -> tuple[int, int]:
     """Incremental index maintenance (the zonemap_refresh twin):
-    SCAN only files not yet indexed, drop rows for files that left
-    the table (compaction/vacuum), swap atomically via the shared
-    temp + double-rename protocol — keeping the index current costs
-    one data pass over the CHANGE, not the table. Returns
-    (n_files_added, n_files_removed); falls back to a full build when
-    no index exists. Geometry (m_bits, k) of retained rows wins over
-    the arguments — mixing geometries in one index would corrupt
-    probes, so a geometry change requires a rebuild.
+    SCAN only files not yet indexed and drop rows for files that left
+    the table (compaction/vacuum), committed as a ``rewrite`` of the
+    index snapshot it read — keeping the index current costs one data
+    pass over the CHANGE, not the table. Returns (n_files_added,
+    n_files_removed); falls back to a full build when no index exists.
+    Geometry (m_bits, k) of retained rows wins over the arguments —
+    mixing geometries in one index would corrupt probes, so a geometry
+    change requires a rebuild.
 
     ``files`` overrides the table scan's file listing with an
     explicit live set — the hook TRANSACTIONAL tables need: a
@@ -276,36 +281,25 @@ def bloom_refresh(
     compacted ones. Pass ``TxTable.read(spark).inputFiles()`` (one
     snapshot resolution) and the index tracks exactly the live
     snapshot across appends, compaction, and vacuum."""
-    import os
-    import shutil
-
-    from etl_spark.sources.zonemap import _heal_tmp
-
     current = (
         set(files)
         if files is not None
         else set(spark.read.parquet(table_path).inputFiles())
     )
-    _heal_tmp(index_path)
-    if not os.path.isdir(index_path):
-        if files is None:
-            write_bloom_index(spark, table_path, cols, index_path, m_bits, k)
-        else:
-            _bloom_rows_of(
-                spark.read.option("basePath", table_path).parquet(*sorted(current)),
-                cols,
-                m_bits,
-                k,
-            ).write.mode("overwrite").parquet(index_path)
+    index = TxTable(index_path)
+    if index.latest_version() == 0:
+        index.overwrite(_bloom_rows_of(_scan(spark, table_path, current), cols, m_bits, k))
         return len(current), 0
-    idx = spark.read.parquet(index_path)
-    geom = idx.select("m_bits", "k").first()
-    m_bits, k = int(geom["m_bits"]), int(geom["k"])
-    known = {r["path"] for r in idx.select("path").distinct().collect()}
-    added, removed = sorted(current - known), known - current
-    kept = idx.filter(~F.col("path").isin(list(removed))) if removed else idx
-    if added:
-        df = spark.read.option("basePath", table_path).parquet(*added)
+    counts: dict[str, tuple[int, int]] = {}
+
+    def _refresh(idx: DataFrame) -> DataFrame:
+        known = {r["path"] for r in idx.select("path").distinct().collect()}
+        added, removed = sorted(current - known), known - current
+        counts["n"] = (len(added), len(removed))
+        kept = idx.filter(~F.col("path").isin(list(removed))) if removed else idx
+        if not added:
+            return kept
+        df = _scan(spark, table_path, added)
         dtypes = dict(df.dtypes)
         # dtype of retained rows wins the same way geometry does: the
         # stored bits were computed by hashing the RECORDED physical
@@ -330,12 +324,17 @@ def bloom_refresh(
                 f"(mixing hash generations in one refresh is refused, like "
                 f"an m_bits/k geometry change)"
             )
-        kept = kept.unionByName(_bloom_rows_of(df, cols, m_bits, k))
-    tmp = index_path.rstrip("/") + ".tmp"
-    bak = index_path.rstrip("/") + ".bak"
-    kept.write.mode("overwrite").parquet(tmp)
-    shutil.rmtree(bak, ignore_errors=True)
-    os.rename(index_path, bak)
-    os.rename(tmp, index_path)
-    shutil.rmtree(bak, ignore_errors=True)
-    return len(added), len(removed)
+        geom = idx.select("m_bits", "k").first()
+        return kept.unionByName(
+            _bloom_rows_of(df, cols, int(geom["m_bits"]), int(geom["k"]))
+        )
+
+    index.rewrite(spark, _refresh)
+    index.vacuum(retain_versions=2)
+    return counts["n"]
+
+
+def _scan(spark: SparkSession, table_path: str, files) -> DataFrame:
+    """The table's rows from ``files`` only; ``basePath`` keeps a
+    hive-partitioned table's directory columns."""
+    return spark.read.option("basePath", table_path).parquet(*sorted(files))

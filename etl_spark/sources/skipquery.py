@@ -11,8 +11,8 @@ pruned-scan == full-filtered-scan identity IS the module contract
 that actually contained matching rows turns the driver row red.
 
 The derived layout lives under the system temp dir, keyed by the
-source file's identity (path + mtime + size), and is built at most
-once per fixture generation: ``orders`` z-ordered on
+source file's identity (path + mtime + size) and the index store
+format, and is built at most once per fixture generation: ``orders`` z-ordered on
 (o_custkey, o_totalprice) into ``N_LAYOUT_FILES`` files, plus a
 Bloom index on the equality column and a zone map on both. At 100 TB
 the layout is the table's real partition layout and the indexes are
@@ -45,10 +45,17 @@ ZORDER_BITS = 6
 PRICE_LO, PRICE_HI = 1000.0, 20000.0
 
 
+# Index store format, hashed into the layout key: a layout whose
+# indexes were written in another on-disk format sits under another
+# root, so it is rebuilt, never misread.
+_STORE_FORMAT = "txlog"
+
+
 def _layout_root(sf: str) -> str:
     src = os.path.join(sf, "orders.parquet")
     tag = hashlib.md5(
-        f"{os.path.abspath(sf)}:{os.path.getmtime(src)}:{os.path.getsize(src)}".encode()
+        f"{os.path.abspath(sf)}:{os.path.getmtime(src)}:{os.path.getsize(src)}"
+        f":{_STORE_FORMAT}".encode()
     ).hexdigest()[:12]
     return os.path.join(tempfile.gettempdir(), f"etl_spark_skip_{tag}")
 
@@ -63,20 +70,7 @@ def ensure_skip_layout(spark: SparkSession, sf: str) -> tuple[str, str, str]:
     bloom = os.path.join(root, "bloom_idx")
     zmap = os.path.join(root, "zonemap")
     marker = os.path.join(root, "_LAYOUT_OK")
-    # pre-r16 markers hold the bare string "ok" (no build_sec); treat
-    # them as unbuilt ONCE so the rebuild records the cost the bench
-    # must disclose (VERDICT r15 #8) — the marker path is mtime-keyed
-    # per fixture generation, so this is a one-time migration
-    rebuild = True
-    if os.path.exists(marker):
-        import json as _json
-
-        try:
-            with open(marker) as fh:
-                rebuild = "build_sec" not in _json.load(fh)
-        except Exception:
-            rebuild = True
-    if rebuild:
+    if not os.path.exists(marker):
         import json
         import shutil
         import time
@@ -110,7 +104,7 @@ def ensure_skip_layout(spark: SparkSession, sf: str) -> tuple[str, str, str]:
 def layout_build_sec(sf: str) -> float | None:
     """The one-time z-order+index build cost recorded by
     ``ensure_skip_layout`` for this fixture generation (None when the
-    layout predates the marker format or is unbuilt)."""
+    layout is unbuilt)."""
     import json
 
     marker = os.path.join(_layout_root(sf), "_LAYOUT_OK")

@@ -35,8 +35,10 @@ A reader holds no locks and never blocks a writer.
 
 Concurrency semantics: the log linearizes commits by version number.
 ``append`` never conflicts (retry just reslots it); ``overwrite``
-is last-writer-wins by log order — the CAS loop in ``_commit`` is
-the optimistic-concurrency core.
+is last-writer-wins by log order. Every read-modify-write commit
+(upsert, delete, compact, and the index and sketch-state stores built
+on this table) is ``rewrite``: a compare-and-swap at the version after
+the snapshot it read, re-derived from the new snapshot on a lost race.
 """
 
 from __future__ import annotations
@@ -45,12 +47,21 @@ import json
 import os
 import shutil
 import uuid
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
 _LOG_DIR = "_txlog"
 _DATA_DIR = "data"
 _MAX_COMMIT_RETRIES = 50
+
+
+def _survivors(predicate: str) -> Callable[[DataFrame], DataFrame]:
+    """The rows a SQL DELETE of ``predicate`` keeps. NOT(p) alone keeps
+    only rows where p is FALSE, so a row where p is NULL (e.g. NULL
+    doc_id vs `doc_id IN (...)`) would be silently erased; SQL DELETE
+    removes only rows where p is TRUE."""
+    return lambda snap: snap.filter(f"NOT coalesce(({predicate}), false)")
 
 
 class TxTable:
@@ -75,8 +86,6 @@ class TxTable:
         commits with a CAS at exactly version 1 — the loser's commit
         returns None and raises here instead of reslotting."""
         t = cls(path)
-        os.makedirs(t._log_path, exist_ok=True)
-        os.makedirs(os.path.join(path, _DATA_DIR), exist_ok=True)
         if t.latest_version() != 0:
             raise ValueError(f"tx table already exists at {path}")
         if t._commit(df, action="overwrite", expect_version=1) is None:
@@ -93,49 +102,53 @@ class TxTable:
 
     def upsert(self, spark: SparkSession, df: DataFrame, keys: list[str]) -> int:
         """Copy-on-write MERGE: rows in ``df`` replace current rows
-        with equal ``keys``; everything else is carried over. Runs as
-        an optimistic loop — if another writer commits between our
-        snapshot read and our commit attempt, the merge recomputes
-        against the new snapshot rather than silently basing on stale
-        data (the lost-update anomaly `saveAsTable` cannot prevent)."""
-        for _ in range(_MAX_COMMIT_RETRIES):
-            base = self.latest_version()
-            merged = (
-                self.read(spark, version=base)
-                .join(df.select(*keys), keys, "left_anti")
-                .unionByName(df)
-            )
-            v = self._commit(merged, action="overwrite", expect_version=base + 1)
-            if v is not None:
-                return v
-        raise RuntimeError(f"upsert to {self.path} kept losing commit races")
+        with equal ``keys``; everything else is carried over. A
+        ``rewrite``, so a writer committing between our snapshot read
+        and our commit makes the merge recompute against the new
+        snapshot rather than silently base on stale data (the
+        lost-update anomaly `saveAsTable` cannot prevent)."""
+        return self.rewrite(
+            spark,
+            lambda snap: snap.join(df.select(*keys), keys, "left_anti").unionByName(df),
+        )
 
     def delete(self, spark: SparkSession, predicate: str) -> int:
         """Copy-on-write DELETE (the takedown path for transactional
         tables, completing ``corpus.delete_docs_from_shards`` for the
         txlog side): commits a new version containing every current
-        row NOT matching ``predicate``. Same optimistic CAS loop as
-        upsert — a concurrent writer's rows are never silently
-        resurrected or dropped, because a lost race re-derives the
-        survivor set from the NEW snapshot. The matched rows' bytes
-        leave the live snapshot immediately and leave DISK when
-        ``vacuum`` retires the superseded version's files — run
-        vacuum after a takedown to complete the erasure."""
+        row NOT matching ``predicate``, as a ``rewrite`` — a concurrent
+        writer's rows are never silently resurrected or dropped. The
+        matched rows' bytes leave the live snapshot immediately and
+        leave DISK when ``vacuum`` retires the superseded version's
+        files — run vacuum after a takedown to complete the erasure."""
+        return self.rewrite(spark, _survivors(predicate))
+
+    def rewrite(
+        self,
+        spark: SparkSession,
+        derive: Callable[[DataFrame], DataFrame],
+        batch_id: int | str | None = None,
+    ) -> int | None:
+        """The one read-modify-write commit: ``derive(snapshot)`` becomes
+        the table's full new contents, committed as a compare-and-swap
+        overwrite of the version it was derived from. A lost race
+        re-derives from the NEW snapshot, so no concurrent commit is
+        silently dropped or based on stale data. With ``batch_id`` the
+        commit rides ``append_once``'s ledger: a replayed batch is
+        skipped (returns None) and ``derive`` is not called. Returns
+        the committed version."""
+        if batch_id is not None and self._batch_replayed(batch_id):
+            return None
+        extra = None if batch_id is None else {"batch_id": batch_id}
         for _ in range(_MAX_COMMIT_RETRIES):
             base = self.latest_version()
-            # NOT(p) keeps only rows where p is FALSE — a NULL
-            # predicate row (e.g. NULL doc_id vs `doc_id IN (...)`)
-            # would be silently erased. SQL DELETE removes only rows
-            # where p is TRUE, so keep TRUE-and-NULL-safe survivors.
-            remaining = self.read(spark, version=base).filter(
-                f"NOT coalesce(({predicate}), false)"
-            )
-            v = self._commit(
-                remaining, action="overwrite", expect_version=base + 1
-            )
+            df = derive(self.read(spark, version=base))
+            v = self._commit(df, "overwrite", expect_version=base + 1, extra=extra)
             if v is not None:
+                if batch_id is not None:
+                    self._seen_batch_ids.add(batch_id)
                 return v
-        raise RuntimeError(f"delete on {self.path} kept losing commit races")
+        raise RuntimeError(f"rewrite of {self.path} kept losing commit races")
 
     def _commit(
         self, df: DataFrame, action: str, expect_version: int | None = None,
@@ -152,6 +165,7 @@ class TxTable:
         rel_dir = os.path.join(_DATA_DIR, f"v{version_guess}-{token}")
         df.write.mode("errorifexists").parquet(os.path.join(self.path, rel_dir))
 
+        os.makedirs(self._log_path, exist_ok=True)  # a first commit creates the log
         tmp = os.path.join(self._log_path, f".tmp-{token}.json")
         version = version_guess
         for _ in range(_MAX_COMMIT_RETRIES):
@@ -219,8 +233,9 @@ class TxTable:
     def _batch_replayed(self, batch_id: int | str) -> bool:
         """Incrementally refresh the batch-id ledger from log entries
         committed since the last call, then answer whether
-        ``batch_id`` has already committed (shared by ``append_once``
-        and ``delete_once`` — one ledger, one scan cursor)."""
+        ``batch_id`` has already committed (shared by ``append_once``,
+        ``overwrite_once`` and ``rewrite`` — one ledger, one scan
+        cursor)."""
         latest = self.latest_version()
         for v in range(self._batch_scan_upto + 1, latest + 1):
             with open(os.path.join(self._log_path, f"{v:08d}.json")) as fh:
@@ -234,11 +249,11 @@ class TxTable:
         self, spark: SparkSession, predicate: str, batch_id: int | str
     ) -> int | None:
         """Idempotent copy-on-write DELETE for streaming foreachBatch
-        — ``delete`` with ``append_once``'s ledger: the batch id rides
-        the commit entry, so a replayed takedown micro-batch (restart
-        in the commit-then-advance-checkpoint window) is detected and
-        skipped instead of committing a second, identical-content
-        version. Returns the version, or None for a skipped replay.
+        — ``delete`` with ``append_once``'s ledger: a replayed takedown
+        micro-batch (restart in the commit-then-advance-checkpoint
+        window) is detected and skipped instead of committing a
+        second, identical-content version. Returns the version, or
+        None for a skipped replay.
 
         Callers multiplexing streams onto one table must namespace the
         id (``streaming.sinks.run_takedown_sink`` commits
@@ -246,29 +261,7 @@ class TxTable:
         batches from 0, so a takedown stream and an ingest stream
         sharing a raw integer ledger would mask each other's first
         batches."""
-        if self._batch_replayed(batch_id):
-            return None
-        for _ in range(_MAX_COMMIT_RETRIES):
-            base = self.latest_version()
-            # NOT(p) keeps only rows where p is FALSE — a NULL
-            # predicate row (e.g. NULL doc_id vs `doc_id IN (...)`)
-            # would be silently erased. SQL DELETE removes only rows
-            # where p is TRUE, so keep TRUE-and-NULL-safe survivors.
-            remaining = self.read(spark, version=base).filter(
-                f"NOT coalesce(({predicate}), false)"
-            )
-            v = self._commit(
-                remaining,
-                action="overwrite",
-                expect_version=base + 1,
-                extra={"batch_id": batch_id},
-            )
-            if v is not None:
-                self._seen_batch_ids.add(batch_id)
-                return v
-        raise RuntimeError(
-            f"delete_once on {self.path} kept losing commit races"
-        )
+        return self.rewrite(spark, _survivors(predicate), batch_id)
 
     # ---------- read path ----------
 
@@ -351,16 +344,13 @@ class TxTable:
         target_files: int = 1,
         cluster_by: list[str] | None = None,
         bits: int = 6,
-    ) -> int | None:
+    ) -> int:
         """OPTIMIZE: rewrite the current snapshot as ``target_files``
         coalesced files in ONE new version — same rows, fewer files
         (appends and streaming micro-batches fragment the table; scan
-        cost at 100 TB tracks file count as much as bytes). Runs as a
-        CAS commit like ``upsert``: losing the race to a concurrent
-        writer skips the compaction (returns None) rather than
-        clobbering the interloper's rows — compaction is a no-op to
-        retry later, never a correctness operation. Old versions stay
-        time-travelable until ``vacuum``.
+        cost at 100 TB tracks file count as much as bytes). A
+        ``rewrite``, so a concurrent writer's rows are folded in, never
+        clobbered. Old versions stay time-travelable until ``vacuum``.
 
         ``cluster_by`` upgrades the rewrite to OPTIMIZE ZORDER BY
         (r14): rows are range-clustered on the Morton interleave of
@@ -372,21 +362,20 @@ class TxTable:
         after the commit — the rewrite replaces every live file."""
         from pyspark.sql import functions as F
 
-        base = self.latest_version()
-        snap = self.read(spark, version=base)
-        if cluster_by:
+        def _layout(snap: DataFrame) -> DataFrame:
+            if not cluster_by:
+                return snap.coalesce(target_files)
             from etl_spark.sources.zonemap import zorder_column
 
             z = zorder_column(snap, cluster_by, bits=bits)
-            df = (
+            return (
                 snap.withColumn("__zv", z)
                 .repartitionByRange(target_files, F.col("__zv"))
                 .sortWithinPartitions("__zv")
                 .drop("__zv")
             )
-        else:
-            df = snap.coalesce(target_files)
-        return self._commit(df, action="overwrite", expect_version=base + 1)
+
+        return self.rewrite(spark, _layout)
 
     def maybe_compact(
         self,
@@ -404,9 +393,7 @@ class TxTable:
         amortized cost is one rewrite per ``max_live_dirs`` batches
         (the small-file debt is repaid before the NEXT scan pays
         interest on it, Delta's optimizeWrite/autoCompact shape).
-        Returns the new version, or None when below threshold or when
-        the CAS rewrite lost to a concurrent writer (both no-ops —
-        retry at the next batch)."""
+        Returns the new version, or None when below threshold."""
         if len(self.live_dirs()) <= max_live_dirs:
             return None
         return self.compact(

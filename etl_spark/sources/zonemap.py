@@ -16,6 +16,12 @@ Build cost: NO data scan — parquet footers already carry per-row-group
 min/max/null statistics, so building the map reads only metadata,
 distributed across executors with mapInPandas over the file list.
 
+Storage: the map is a ``TxTable`` (sources/txlog.py). A full build is
+an ``overwrite`` commit, a refresh a ``rewrite`` of the snapshot it
+read, and every reader resolves the committed snapshot through the
+log, so a reader racing a refresh sees one whole map, never a missing
+directory.
+
 Skipping contract (the part that must be airtight):
 - stats min/max are over NON-NULL values: rows with NULL in the
   predicate column can never satisfy a range predicate, so files
@@ -36,6 +42,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_spark.sources.txlog import TxTable
 from etl_spark.tables import scan_parquet
 
 _ZM_SCHEMA = (
@@ -54,7 +61,12 @@ def build_zonemap(spark: SparkSession, table_path: str, cols: list[str]) -> Data
     each task reads its files' metadata. Numeric/temporal stats land
     in min_num/max_num (timestamps as epoch micros), strings in
     min_str/max_str."""
-    files = spark.read.parquet(table_path).inputFiles()
+    return _file_stats(spark, spark.read.parquet(table_path).inputFiles(), cols)
+
+
+def _file_stats(spark: SparkSession, files: list[str], cols: list[str]) -> DataFrame:
+    """``_footer_stats`` over an explicit file list, one task per file
+    up to the default parallelism."""
     fdf = spark.createDataFrame([(f,) for f in files], "path string").repartition(
         max(1, min(len(files), spark.sparkContext.defaultParallelism))
     )
@@ -141,7 +153,8 @@ def _footer_stats(fdf: DataFrame, cols: list[str]) -> DataFrame:
 def write_zonemap(
     spark: SparkSession, table_path: str, cols: list[str], zonemap_path: str
 ) -> None:
-    build_zonemap(spark, table_path, cols).write.mode("overwrite").parquet(zonemap_path)
+    """Full build, committed as an ``overwrite`` of the map's TxTable."""
+    TxTable(zonemap_path).overwrite(build_zonemap(spark, table_path, cols))
 
 
 def pruned_files(
@@ -158,6 +171,18 @@ def pruned_files(
     The collect here is one row per FILE — the same driver-side scale
     as Spark's own file-listing step for any parquet read, which this
     list feeds; it is never row-scale."""
+    kept, mapped = _pruned(TxTable(zonemap_path).read(spark), zonemap_path, col, lo, hi)
+    return kept, len(mapped)
+
+
+def _pruned(
+    zm: DataFrame,
+    zonemap_path: str,
+    col: str,
+    lo: float | str | None,
+    hi: float | str | None,
+) -> tuple[list[str], set[str]]:
+    """(kept paths, every path the map ``zm`` holds ``col`` rows for)."""
     import datetime as _dt
 
     def _bound(v):
@@ -167,8 +192,7 @@ def pruned_files(
         return v
 
     lo, hi = _bound(lo), _bound(hi)
-    _heal_tmp(zonemap_path)
-    zm = scan_parquet(spark, zonemap_path).filter(F.col("col") == col)
+    zm = zm.filter(F.col("col") == col)
     is_str = isinstance(lo, str) or isinstance(hi, str)
     mn = F.col("min_str") if is_str else F.col("min_num")
     mx = F.col("max_str") if is_str else F.col("max_num")
@@ -187,7 +211,7 @@ def pruned_files(
             f"zone map at {zonemap_path} has no statistics for column "
             f"{col!r} — build it with write_zonemap/zonemap_refresh"
         )
-    return sorted(r["path"] for r in rows if r["k"]), len(rows)
+    return sorted(r["path"] for r in rows if r["k"]), {r["path"] for r in rows}
 
 
 def zonemap_scan(
@@ -240,82 +264,38 @@ def zonemap_refresh(
     Returns (n_files_added, n_files_removed). Falls back to a full
     build when no map exists.
 
+    The map is a TxTable: the refresh is a ``rewrite`` of the snapshot
+    it read, so a reader sees the old map or the new one, never a
+    missing or half-written one, and a crash before the commit leaves
+    only an unreferenced data dir. ``vacuum(retain_versions=2)`` then
+    keeps the replaced version for readers in flight.
+
     ``files`` overrides the table scan's file listing with an
     explicit live set (the bloom_refresh twin of the same hook): a
     TxTable's root holds every version's data dirs, so pass
     ``TxTable.read(spark).inputFiles()`` and the map tracks exactly
     the live snapshot across appends, compaction, and vacuum."""
-    import os
-
     current = (
         set(files)
         if files is not None
         else set(spark.read.parquet(table_path).inputFiles())
     )
-    _heal_tmp(zonemap_path)
-    if not os.path.isdir(zonemap_path):
-        if files is None:
-            write_zonemap(spark, table_path, cols, zonemap_path)
-        else:
-            fdf = spark.createDataFrame(
-                [(f,) for f in sorted(current)], "path string"
-            )
-            _footer_stats(fdf, cols).write.mode("overwrite").parquet(
-                zonemap_path
-            )
+    zm = TxTable(zonemap_path)
+    if zm.latest_version() == 0:
+        zm.overwrite(_file_stats(spark, sorted(current), cols))
         return len(current), 0
-    zm = spark.read.parquet(zonemap_path)
-    known = {r["path"] for r in zm.select("path").distinct().collect()}
-    added, removed = sorted(current - known), known - current
-    kept = zm.filter(~F.col("path").isin(list(removed))) if removed else zm
-    if added:
-        fdf = spark.createDataFrame([(f,) for f in added], "path string")
-        fresh = _footer_stats(fdf, cols)
-        kept = kept.unionByName(fresh)
-    # temp + DOUBLE-RENAME swap (ADVICE r9): rename(old -> .bak) then
-    # rename(tmp -> path) then rmtree(.bak). The old rmtree+rename
-    # left the map ABSENT for the whole rmtree; now the absent window
-    # is just the instant between the two renames, and every crash
-    # point leaves a committed map for _heal_tmp to adopt (.tmp with
-    # _SUCCESS wins over .bak — it is newer). A SINGLE maintainer is
-    # still assumed (the txlog one-writer convention); a concurrent
-    # reader that hits the rename instant should retry.
-    tmp = zonemap_path.rstrip("/") + ".tmp"
-    bak = zonemap_path.rstrip("/") + ".bak"
-    kept.write.mode("overwrite").parquet(tmp)
-    import shutil
+    counts: dict[str, tuple[int, int]] = {}
 
-    shutil.rmtree(bak, ignore_errors=True)
-    os.rename(zonemap_path, bak)
-    os.rename(tmp, zonemap_path)
-    shutil.rmtree(bak, ignore_errors=True)
-    return len(added), len(removed)
+    def _refresh(snap: DataFrame) -> DataFrame:
+        known = {r["path"] for r in snap.select("path").distinct().collect()}
+        added, removed = sorted(current - known), known - current
+        counts["n"] = (len(added), len(removed))
+        kept = snap.filter(~F.col("path").isin(list(removed))) if removed else snap
+        return kept.unionByName(_file_stats(spark, added, cols)) if added else kept
 
-
-def _heal_tmp(zonemap_path: str) -> None:
-    """Adopt the newest committed map after a crashed refresh swap.
-    Crash points of zonemap_refresh's double-rename (old -> .bak,
-    tmp -> path, rmtree .bak):
-
-    - map dir absent, <path>.tmp carries _SUCCESS: the tmp IS the
-      newest committed map — adopt it;
-    - map dir absent, no complete tmp, <path>.bak present: the swap
-      died between the renames with an incomplete tmp — restore the
-      previous map from .bak;
-    - map dir present, <path>.bak left behind: the swap committed but
-      the cleanup didn't — drop the stale .bak."""
-    import os
-    import shutil
-
-    tmp = zonemap_path.rstrip("/") + ".tmp"
-    bak = zonemap_path.rstrip("/") + ".bak"
-    if not os.path.isdir(zonemap_path):
-        if os.path.exists(os.path.join(tmp, "_SUCCESS")):
-            os.rename(tmp, zonemap_path)
-        elif os.path.isdir(bak):
-            os.rename(bak, zonemap_path)
-    if os.path.isdir(zonemap_path):
-        shutil.rmtree(bak, ignore_errors=True)
+    zm.rewrite(spark, _refresh)
+    zm.vacuum(retain_versions=2)
+    return counts["n"]
 
 
 def zonemap_scan_multi(
@@ -334,18 +314,16 @@ def zonemap_scan_multi(
     full = scan_parquet(spark, table_path)
     if not predicates:
         return full  # no predicate = no pruning, never an empty scan
-    _heal_tmp(zonemap_path)  # BEFORE any map read (the crash window)
-    mapped = {
-        r["path"]
-        for r in scan_parquet(spark, zonemap_path).select("path").distinct().collect()
-    }
+    zm = TxTable(zonemap_path).read(spark)  # one snapshot for every predicate
+    table_files = set(full.inputFiles())
     kept: set[str] | None = None
     for col, lo, hi in predicates:
-        paths, _ = pruned_files(spark, zonemap_path, col, lo, hi)
-        kept = set(paths) if kept is None else (kept & set(paths))
-    # STALENESS GUARD: files the map has never seen are kept
-    # unconditionally — a stale map costs IO, never rows
-    paths = sorted((kept or set()) | (set(full.inputFiles()) - mapped))
+        paths, mapped = _pruned(zm, zonemap_path, col, lo, hi)
+        # STALENESS GUARD: files the map has never seen are kept
+        # unconditionally — a stale map costs IO, never rows
+        keep = set(paths) | (table_files - mapped)
+        kept = keep if kept is None else (kept & keep)
+    paths = sorted(kept)
     if not paths:
         return full.limit(0)
     # basePath: when the table is hive-partitioned (zone map on a

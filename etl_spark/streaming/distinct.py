@@ -10,25 +10,25 @@ the whole day's events every tick. Here each micro-batch folds into
 per-(day, chunk) BIGINT bitmaps and the count is a popcount sum over
 state proportional to the id domain / 63 — never the event volume.
 
+Storage: the state is a ``TxTable`` (sources/txlog.py). Each
+micro-batch commits its delta with ``append_once(delta, batch_id)``;
+reads take the committed snapshot (the last compaction plus the deltas
+since) and always merge it. ``compact_bitmap_state`` is a ``rewrite``
+of the snapshot through the merge, which keeps the live dir count
+bounded on long-running streams.
+
 Replay story (belt and braces): bit_or is idempotent, so even a
-double-applied batch cannot change a bit; on top, each batch writes
-its delta under ``batch-<id>`` with Spark's ``_SUCCESS`` as the commit
-marker and replays skip committed dirs (the run_neardup_ingest
-convention), so restarts are byte-identical. ``compact_bitmap_state``
-folds deltas into ``base`` (the compact_cc_index convention) to keep
-the dir count bounded on long-running streams.
+double-applied batch cannot change a bit; on top, the log records each
+batch id, so a replayed batch — before or after a compaction — commits
+nothing and restarts are byte-identical.
 
 Scale: per batch ONE chunk aggregate (map-side bit_or does the dedup
-work) + one bounded write; reads union base + deltas and merge —
-state is days x (domain/63) rows no matter how many events flowed.
+work) + one bounded write; reads merge the snapshot — state is days x
+(domain/63) rows no matter how many events flowed.
 """
 
 from __future__ import annotations
 
-import glob
-import os
-import re
-import shutil
 from collections.abc import Callable
 from typing import Any
 
@@ -40,58 +40,72 @@ from etl_spark.extensions.sketches import (
     bitmap_chunks,
     bitmap_count,
     bitmap_merge,
+    hll_estimate,
+    hll_estimate_corrected,
+    hll_merge,
+    hll_registers,
 )
-from etl_spark.streaming.neardup import batch_committed, drain, write_counted
+from etl_spark.sources.txlog import TxTable
+from etl_spark.streaming.neardup import drain
 
 _SCHEMA = "day date, chunk bigint, bits bigint"
+_HLL_SCHEMA = "day date, bucket bigint, rho int"
 
 
-def _base_dir(path: str) -> str | None:
-    """The committed ``base`` dir, HEALING an interrupted compact
-    (ADVICE r10): the compact protocol is tmp-write -> rename(base,
-    bak) -> rename(tmp, base) -> rm bak -> rm deltas, and a crash
-    between the two renames leaves no ``base`` at all. The folded
-    state then still exists — in ``base.tmp`` (the freshly committed
-    merge) and ``base.bak`` (the pre-merge fold) — so promote the
-    newest committed snapshot back to ``base``. Deltas are never
-    dropped until a committed base exists (see ``_compact_state``),
-    and bit_or/max idempotence makes re-merging them harmless, so no
-    crash point loses state."""
-    base = os.path.join(path, "base")
-    if batch_committed(base):
-        return base
-    for cand in ("base.tmp", "base.bak"):
-        c = os.path.join(path, cand)
-        if batch_committed(c):
-            os.rename(c, base)
-            return base
-    return None
+def _merged_state(
+    spark: SparkSession,
+    path: str,
+    merge: Callable[[DataFrame], DataFrame],
+    schema: str,
+) -> DataFrame:
+    """The committed snapshot at ``path`` merged by ``merge``; an
+    empty log gives the empty frame with ``schema``."""
+    t = TxTable(path)
+    if t.latest_version() == 0:
+        return spark.createDataFrame([], schema)
+    return merge(t.read(spark))
 
 
-def _state_dirs(path: str) -> list[str]:
-    """Committed state dirs: optional ``base`` plus ``batch-<id>``
-    deltas in batch order."""
-    out = []
-    base = _base_dir(path)
-    if base is not None:
-        out.append(base)
-    deltas = []
-    for d in glob.glob(os.path.join(path, "batch-*")):
-        m = re.fullmatch(r"batch-(\d+)", os.path.basename(d))
-        if m and batch_committed(d):
-            deltas.append((int(m.group(1)), d))
-    out.extend(d for _, d in sorted(deltas))
-    return out
+def _ingest_sink(
+    stream_df: DataFrame,
+    state_path: str,
+    checkpoint: str,
+    sketch: Callable[[DataFrame, list[str], str], DataFrame],
+    on_batch: Callable[[int, int], Any] | None,
+) -> StreamingQuery:
+    """Drain ``stream_df`` into the state at ``state_path``: each batch's
+    ``sketch`` of (day, user_id) is one ``append_once`` commit, and
+    ``on_batch(batch_id, n_rows)`` gets the row count observed on that
+    write — only when the batch committed (a replay writes nothing)."""
+    t = TxTable(state_path)
+
+    def _ingest(batch_df: DataFrame, batch_id: int) -> None:
+        seen = Observation()
+        batch = batch_df.observe(seen, F.count(F.lit(1)).alias("n"))
+        delta = sketch(
+            batch.select(F.to_date("ts").alias("day"), "user_id"), ["day"], "user_id"
+        )
+        if t.append_once(delta, batch_id) is not None and on_batch is not None:
+            on_batch(batch_id, seen.get["n"])
+
+    return drain(stream_df, _ingest, checkpoint)
+
+
+def _compact(spark: SparkSession, path: str, merge: Callable[[DataFrame], DataFrame]) -> None:
+    """Fold the snapshot into one data dir: a ``rewrite`` through
+    ``merge``, so a crash before the commit leaves the previous state
+    live. The replaced version is kept for readers in flight."""
+    t = TxTable(path)
+    if t.latest_version() == 0:
+        return
+    t.rewrite(spark, merge)
+    t.vacuum(retain_versions=2)
 
 
 def bitmap_state(spark: SparkSession, path: str) -> DataFrame:
-    """The effective (day, chunk, bits) state: base ∪ deltas merged
-    by bit_or. Empty state => empty frame with the state schema."""
-    dirs = _state_dirs(path)
-    if not dirs:
-        return spark.createDataFrame([], _SCHEMA)
-    parts = [spark.read.parquet(d) for d in dirs]
-    return parts[0] if len(parts) == 1 else bitmap_merge(*parts)
+    """The effective (day, chunk, bits) state: the snapshot merged by
+    bit_or. Empty state => empty frame with the state schema."""
+    return _merged_state(spark, path, bitmap_merge, _SCHEMA)
 
 
 def distinct_counts(spark: SparkSession, path: str) -> DataFrame:
@@ -109,78 +123,24 @@ def run_distinct_ingest(
     """``foreachBatch`` sink maintaining the daily distinct-user
     bitmap state from an events stream (needs ``ts`` and ``user_id``
     columns). ``on_batch(batch_id, n_rows)`` is the observability
-    hook. Batches are skipped when already committed; a re-run of an
-    uncommitted batch overwrites its own partial delta, and bit_or
-    idempotence makes even an unexpected double-apply harmless."""
-
-    def _ingest(batch_df: DataFrame, batch_id: int) -> None:
-        d = os.path.join(state_path, f"batch-{batch_id}")
-        if batch_committed(d):
-            return
-        seen = Observation()  # the batch's row count, taken on the delta write
-        batch = batch_df.observe(seen, F.count(F.lit(1)).alias("n"))
-        delta = bitmap_chunks(
-            batch.select(F.to_date("ts").alias("day"), "user_id"), ["day"], "user_id"
-        )
-        delta.write.mode("overwrite").parquet(d)
-        if on_batch is not None:
-            on_batch(batch_id, seen.get["n"])
-
-    return drain(stream_df, _ingest, checkpoint)
-
-
-def _compact_state(
-    spark: SparkSession,
-    path: str,
-    state_fn: Callable[[SparkSession, str], DataFrame],
-) -> None:
-    """Shared compact protocol (ADVICE r10 factored it out of the
-    bitmap/HLL twins): materialize the full merged state to
-    ``base.tmp`` FIRST, then rename base->bak, tmp->base, and drop
-    bak + deltas — deltas only AFTER a committed base is verified, so
-    no crash point leaves less state than before the compact.
-    ``_base_dir`` heals the one window (between the two renames)
-    where ``base`` itself is briefly absent."""
-    dirs = _state_dirs(path)
-    if not dirs:
-        return
-    tmp = os.path.join(path, "base.tmp")
-    write_counted(state_fn(spark, path), tmp)
-    base = os.path.join(path, "base")
-    bak = os.path.join(path, "base.bak")
-    shutil.rmtree(bak, ignore_errors=True)  # stale bak from a crashed run
-    if os.path.isdir(base):
-        os.rename(base, bak)
-    os.rename(tmp, base)
-    shutil.rmtree(bak, ignore_errors=True)
-    if batch_committed(base):
-        for d in dirs:
-            if os.path.basename(d) != "base":
-                shutil.rmtree(d, ignore_errors=True)
+    hook, called for each committed batch. A replayed batch commits
+    nothing, and bit_or idempotence makes even an unexpected
+    double-apply harmless."""
+    return _ingest_sink(stream_df, state_path, checkpoint, bitmap_chunks, on_batch)
 
 
 def compact_bitmap_state(spark: SparkSession, path: str) -> None:
-    """Fold base + deltas into a fresh ``base`` and drop the deltas
-    (the compact_cc_index convention) via the crash-safe
-    ``_compact_state`` protocol."""
-    _compact_state(spark, path, bitmap_state)
+    """Fold the state's deltas into one bit_or-merged data dir."""
+    _compact(spark, path, bitmap_merge)
 
 
 # --- HLL twin: bounded state even when the id domain is unbounded ---------
 
-_HLL_SCHEMA = "day date, bucket bigint, rho int"
-
 
 def hll_state(spark: SparkSession, path: str) -> DataFrame:
-    """Effective per-day HLL registers: base ∪ deltas merged by
+    """Effective per-day HLL registers: the snapshot merged by
     element-wise max. Empty state => empty frame."""
-    from etl_spark.extensions.sketches import hll_merge
-
-    dirs = _state_dirs(path)
-    if not dirs:
-        return spark.createDataFrame([], _HLL_SCHEMA)
-    parts = [spark.read.parquet(d) for d in dirs]
-    return parts[0] if len(parts) == 1 else hll_merge(*parts)
+    return _merged_state(spark, path, hll_merge, _HLL_SCHEMA)
 
 
 def hll_distinct_estimates(
@@ -192,11 +152,6 @@ def hll_distinct_estimates(
     sigma/tau estimator (``hll_estimate_corrected``) — same stored
     state, no branch-point bias bump around 2.5m; prefer it for
     monitors that alert on day-over-day deltas."""
-    from etl_spark.extensions.sketches import (
-        hll_estimate,
-        hll_estimate_corrected,
-    )
-
     fold = hll_estimate_corrected if corrected else hll_estimate
     return fold(hll_state(spark, path), ["day"])
 
@@ -212,30 +167,15 @@ def run_hll_ingest(
     non-integer id domains: state is days x m registers no matter how
     many distinct ids flow (bitmaps grow with the id domain; registers
     never do). max() is idempotent, so the same replay story as
-    ``run_distinct_ingest`` applies (commit markers as the belt,
-    algebra as the braces)."""
-    from etl_spark.extensions.sketches import hll_registers
-
-    def _ingest(batch_df: DataFrame, batch_id: int) -> None:
-        d = os.path.join(state_path, f"batch-{batch_id}")
-        if batch_committed(d):
-            return
-        seen = Observation()  # the batch's row count, taken on the delta write
-        batch = batch_df.observe(seen, F.count(F.lit(1)).alias("n"))
-        delta = hll_registers(
-            batch.select(F.to_date("ts").alias("day"), "user_id"), ["day"], "user_id"
-        )
-        delta.write.mode("overwrite").parquet(d)
-        if on_batch is not None:
-            on_batch(batch_id, seen.get["n"])
-
-    return drain(stream_df, _ingest, checkpoint)
+    ``run_distinct_ingest`` applies (the log's batch ledger as the
+    belt, algebra as the braces)."""
+    return _ingest_sink(stream_df, state_path, checkpoint, hll_registers, on_batch)
 
 
 def compact_hll_state(spark: SparkSession, path: str) -> None:
-    """Fold base + register deltas into a fresh ``base`` via the same
-    crash-safe ``_compact_state`` protocol as the bitmap twin."""
-    _compact_state(spark, path, hll_state)
+    """Fold the register deltas into one max-merged data dir, the same
+    ``rewrite`` as the bitmap twin."""
+    _compact(spark, path, hll_merge)
 
 
 def distinct_alerts(

@@ -78,7 +78,6 @@ def stream_events(spark: SparkSession, path: str, schema: str | None = None) -> 
         (f for f in StructType.fromDDL(schema).fields if f.name == "ts"), None
     )
     if ts_field is not None and isinstance(ts_field.dataType, LongType):
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         raw = spark.readStream.schema(schema).parquet(path)
         return raw.withColumn(
             "ts",

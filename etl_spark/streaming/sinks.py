@@ -30,7 +30,7 @@ from __future__ import annotations
 from collections.abc import Callable
 from typing import Any
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
@@ -286,14 +286,11 @@ def run_scd2_sink(
             state["t"] = t
         if t._batch_replayed(batch_id):
             return
-        dim = t.read(spark)
-        new_dim = scd2_merge(dim, batch_df, keys, ts_col).persist()
-        try:
-            n = new_dim.count()
-            t.overwrite_once(new_dim, batch_id)
-        finally:
-            new_dim.unpersist()
-        if on_batch is not None:
-            on_batch(batch_id, n)
+        seen = Observation()  # the dimension's row count, taken on its write
+        new_dim = scd2_merge(t.read(spark), batch_df, keys, ts_col).observe(
+            seen, F.count(F.lit(1)).alias("n")
+        )
+        if t.overwrite_once(new_dim, batch_id) is not None and on_batch is not None:
+            on_batch(batch_id, seen.get["n"])
 
     return drain(stream_df, _apply, checkpoint)

@@ -66,8 +66,8 @@ def events_ts_physical_type(path: str) -> str:
 # and size, so an overwritten table self-invalidates — the
 # _TABLE_BYTES_CACHE convention (ADVICE r4); the session UUID keys out
 # stopped/parallel sessions. The analysis-state marker is "" for every
-# plain scan and the (session timeZone, nanosAsLong) pair for events:
-# its ts normalization resolves those confs at ANALYSIS time
+# plain scan and the session timeZone for events: its ts
+# normalization resolves that conf at ANALYSIS time
 # (Catalyst's ResolveTimeZone — the r10 bug class _SESSION_PINS
 # exists for), so a frame analyzed under a different timeZone must
 # never be served to a pinned query (ADVICE r15).
@@ -126,23 +126,19 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
       for NTZ, and wall-clock-stable for LTZ because the session TZ is
       pinned to UTC (session.py).
     - ``int64`` / ``timestamp[ns]`` (old fixture): Spark's reader
-      rejects nanos natively; read as raw int64 nanos (``nanosAsLong``)
-      and floor-truncate to microseconds — exactly what DuckDB's µs
-      timestamp does, so oracle parity holds.
+      rejects nanos natively; read as raw int64 nanos (``nanosAsLong``,
+      set in ``session._DEFAULTS``) and floor-truncate to microseconds
+      — exactly what DuckDB's µs timestamp does, so oracle parity
+      holds.
     """
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
     path = f"{sf_dir}/{name}.parquet"
-    # events resolves session TZ / nanosAsLong at analysis time, so
-    # those confs join the key; every other table's scan is conf-free
+    # events resolves the session TZ at analysis time, so it joins the
+    # key; every other table's scan is conf-free
     if name == "events":
         try:
-            analysis_state = "%s|%s" % (
-                spark.conf.get("spark.sql.session.timeZone"),
-                spark.conf.get(
-                    "spark.sql.legacy.parquet.nanosAsLong", "false"
-                ),
-            )
+            analysis_state = spark.conf.get("spark.sql.session.timeZone")
         except Exception:  # pragma: no cover - host-specific
             analysis_state = "?"
     else:
@@ -156,7 +152,6 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
         ts_type = events_ts_physical_type(path)
         if ts_type == "int64" or ts_type.startswith("timestamp[ns"):
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
             # epoch + exact DECIMAL seconds => TIMESTAMP_NTZ, no
             # session-tz dependence (make_dt_interval's seconds arg is
             # DECIMAL-exact to the microsecond)

@@ -153,9 +153,8 @@ def test_dtype_recorded_probe_casts(spark, table_and_index):
 
 def test_bloom_refresh_incremental(spark, tmp_path):
     """bloom_refresh scans only NEW files, drops rows for removed
-    files, survives a crashed swap (shared _heal_tmp protocol), and
-    the refreshed index prunes identically to a from-scratch
-    rebuild."""
+    files, and the refreshed index prunes identically to a
+    from-scratch rebuild."""
     import os
 
     from etl_spark.sources.bloomindex import bloom_refresh
@@ -245,11 +244,15 @@ def test_mixed_dtype_generations_probe_both(spark, tmp_path):
         pa.table({"uid": pa.array([777, 900, 901], pa.int64())}),
         str(d64 / "new.parquet"),
     )
+    from etl_spark.sources.txlog import TxTable
+
     merged = str(tmp_path / "merged_idx")
-    build_bloom_index(spark, str(d32), ["uid"]).unionByName(
-        build_bloom_index(spark, str(d64), ["uid"])
-    ).write.parquet(merged)
-    idx = spark.read.parquet(merged)
+    TxTable(merged).overwrite(
+        build_bloom_index(spark, str(d32), ["uid"]).unionByName(
+            build_bloom_index(spark, str(d64), ["uid"])
+        )
+    )
+    idx = TxTable(merged).read(spark)
     assert idx.select("dtype").distinct().count() == 2  # genuinely mixed
     kept, total = bloom_pruned_files(spark, merged, "uid", 777)
     names = {p.rsplit("/", 1)[-1] for p in kept}

@@ -24,8 +24,6 @@ PKG = Path(etl_spark.__file__).parent
 _CONF_WRITE_ALLOWLIST = {
     ("session.py", "scoped_session"),  # a fresh child, before anyone sees it
     ("sources/writers.py", "_dynamic_overwrite"),  # insertInto ignores the option
-    ("tables.py", "load"),  # nanosAsLong read format
-    ("streaming/monitor.py", "stream_events"),  # nanosAsLong read format
 }
 _CONF_WRITE = re.compile(r"\.conf\.(un)?set\(")
 
@@ -175,3 +173,39 @@ def test_cc_keeps_only_the_final_round_persisted(spark, sf_dir):
         df.collect()
         held.append(df)
         assert len(_persisted_rdd_ids(spark) - before) <= 1
+
+
+def test_load_reads_nanos_events_without_writing_the_conf(spark, tmp_path):
+    """An events table whose ``ts`` is INT64 TIMESTAMP(NANOS) loads as
+    µs-truncated TIMESTAMP_NTZ, and the caller's conf map is the same
+    before and after: the read format comes from the session defaults."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import TimestampNTZType
+
+    from etl_spark.tables import events_ts_physical_type, load
+
+    nanos = [1_704_067_200_123_456_789, 1_704_153_600_000_000_999]
+    path = str(tmp_path / "events.parquet")
+    pq.write_table(
+        pa.table(
+            {
+                "event_id": pa.array([1, 2], pa.int64()),
+                "ts": pa.array(nanos, pa.timestamp("ns")),
+            }
+        ),
+        path,
+    )
+    assert events_ts_physical_type(path).startswith("timestamp[ns")
+    caller = spark.newSession()
+    before = dict(caller.conf.getAll)
+    df = load(caller, str(tmp_path), "events")
+    rows = sorted(df.collect())
+    assert isinstance(df.schema["ts"].dataType, TimestampNTZType)
+    assert [r.ts for r in rows] == [
+        dt.datetime(2024, 1, 1, 0, 0, 0, 123456),
+        dt.datetime(2024, 1, 2, 0, 0, 0, 0),
+    ]
+    assert dict(caller.conf.getAll) == before

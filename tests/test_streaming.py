@@ -1876,11 +1876,11 @@ def test_streaming_ingest_autocompact_heals_skipping_indexes(spark, tmp_path):
     live = set(t.read(spark).inputFiles())
     idx_files = {
         r["path"]
-        for r in spark.read.parquet(bloom_idx).select("path").distinct().collect()
+        for r in TxTable(bloom_idx).read(spark).select("path").distinct().collect()
     }
     zm_files = {
         r["path"]
-        for r in spark.read.parquet(zmap).select("path").distinct().collect()
+        for r in TxTable(zmap).read(spark).select("path").distinct().collect()
     }
     assert idx_files == live, (idx_files ^ live)
     assert zm_files == live, (zm_files ^ live)

@@ -3,9 +3,9 @@ bitmap kernel run as an ingest-time accumulator. Proves (a) counts off
 the stored state equal batch countDistinct over everything ingested,
 (b) restart from the same checkpoint ingests nothing twice, (c) a
 fresh-checkpoint replay of the same deterministic file sequence
-changes neither state nor counts (commit markers + bit_or
-idempotence), (d) compaction folds deltas into base with identical
-counts.
+changes neither state nor counts (the log's batch-id ledger + bit_or
+idempotence), (d) compaction folds the deltas into one data dir with
+identical counts.
 """
 
 from __future__ import annotations
@@ -14,8 +14,10 @@ import os
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+import pytest
 from pyspark.sql import functions as F
 
+from etl_spark.sources.txlog import TxTable
 from etl_spark.streaming.distinct import (
     bitmap_state,
     compact_bitmap_state,
@@ -113,12 +115,15 @@ def test_streaming_distinct_end_to_end(spark, tmp_path):
         "1995-03-03": 1,
     }
 
-    # compaction: deltas fold into base, counts identical
+    # compaction: deltas fold into one data dir, counts identical
     compact_bitmap_state(spark, state)
-    assert os.path.isdir(os.path.join(state, "base"))
-    assert not [
-        d for d in os.listdir(state) if d.startswith("batch-")
-    ], "deltas must be dropped after compaction"
+    t = TxTable(state)
+    assert len(t.live_dirs()) == 1, "deltas must be dropped after compaction"
+    t.vacuum(retain_versions=2, grace_seconds=0)
+    v = t.latest_version()
+    assert {os.path.join("data", d) for d in os.listdir(os.path.join(state, "data"))} <= set(
+        t.live_dirs(v) + t.live_dirs(v - 1)
+    )
     assert _counts(spark, state) == {
         "1995-03-01": 4,
         "1995-03-02": 1,
@@ -249,13 +254,12 @@ def test_distinct_alerts_fire_on_condition(spark, tmp_path):
     assert len(distinct_alerts(spark, state, "not_empty")) == 2
 
 
-def test_compact_crash_window_recovers(spark, tmp_path):
-    """ADVICE r10: a crash BETWEEN rename(base, bak) and rename(tmp,
-    base) used to lose everything folded by earlier compactions —
-    reads saw delta-only state. Simulate each crash point of the
-    protocol and prove reads heal and a re-compact converges."""
+def test_compact_crash_window_recovers(spark, tmp_path, monkeypatch):
+    """A compaction that dies at the log claim, after writing the
+    merged state, leaves the previous state live: the same counts, no
+    new data dir visible to readers; the next compaction converges to
+    one live dir with the same counts."""
     import datetime as dt
-    import shutil
 
     src = tmp_path / "in"
     src.mkdir()
@@ -266,38 +270,68 @@ def test_compact_crash_window_recovers(spark, tmp_path):
         _stream(spark, src), state, checkpoint=str(tmp_path / "ckpt")
     )
     q.awaitTermination(120)
-    compact_bitmap_state(spark, state)  # users {1,2} now live ONLY in base
+    compact_bitmap_state(spark, state)  # users {1,2} now live ONLY in the fold
 
-    # new delta on top of the compacted base
+    # new delta on top of the compacted state
     _drop(src, "f1.parquet", [(d1, 63)], mtime=1_000_100)
     q = run_distinct_ingest(
         _stream(spark, src), state, checkpoint=str(tmp_path / "ckpt")
     )
     q.awaitTermination(120)
     assert _counts(spark, state) == {"1995-03-01": 3}
+    before = sorted(map(tuple, bitmap_state(spark, state).collect()))
+    live = TxTable(state).live_dirs()
+    assert len(live) == 2
 
-    # crash point A: between the two renames — base is GONE, the
-    # pre-merge fold sits in base.bak, the delta dir still exists
-    os.rename(os.path.join(state, "base"), os.path.join(state, "base.bak"))
-    assert _counts(spark, state) == {"1995-03-01": 3}, (
-        "read must heal base.bak — delta-only state loses users 1,2"
-    )
-    assert os.path.isdir(os.path.join(state, "base")), "heal promotes to base"
+    def _fail_log_claim(*_a, **_k):
+        raise OSError("injected failure at the log claim")
 
-    # crash point B: tmp committed (full merge), base renamed away
+    with monkeypatch.context() as m:
+        m.setattr("etl_spark.sources.txlog.os.link", _fail_log_claim)
+        with pytest.raises(OSError, match="injected"):
+            compact_bitmap_state(spark, state)
+    assert sorted(map(tuple, bitmap_state(spark, state).collect())) == before
+    assert _counts(spark, state) == {"1995-03-01": 3}
+    assert TxTable(state).live_dirs() == live
+    read = TxTable(state).read(spark).inputFiles()
+    assert all(any("/" + d + "/" in f for d in live) for f in read)
+
+    # and a subsequent compact converges
     compact_bitmap_state(spark, state)
-    bitmap_state(spark, state).write.mode("overwrite").parquet(
-        os.path.join(state, "base.tmp")
-    )
-    shutil.rmtree(os.path.join(state, "base.bak"), ignore_errors=True)
-    os.rename(os.path.join(state, "base"), os.path.join(state, "base.bak"))
-    assert _counts(spark, state) == {"1995-03-01": 3}, (
-        "read must prefer the newer committed base.tmp"
-    )
+    assert len(TxTable(state).live_dirs()) == 1
+    assert sorted(map(tuple, bitmap_state(spark, state).collect())) == before
+    assert _counts(spark, state) == {"1995-03-01": 3}
 
-    # and a subsequent compact converges to a clean layout
+
+def test_replay_after_compaction_changes_nothing(spark, tmp_path):
+    """Batches replayed from a fresh checkpoint after a compaction
+    (same files, so the same batch ids) commit nothing and never reach
+    ``on_batch``: the log keeps every batch id past the compaction."""
+    import datetime as dt
+
+    src = tmp_path / "in"
+    src.mkdir()
+    state = str(tmp_path / "state")
+    d1 = dt.datetime(1995, 3, 1, 10, 0)
+    _drop(src, "f0.parquet", [(d1, 1), (d1, 2)], mtime=1_000_000)
+    _drop(src, "f1.parquet", [(d1, 63)], mtime=1_000_100)
+    q = run_distinct_ingest(
+        _stream(spark, src), state, checkpoint=str(tmp_path / "ckpt")
+    )
+    q.awaitTermination(120)
     compact_bitmap_state(spark, state)
-    assert os.path.isdir(os.path.join(state, "base"))
-    assert not os.path.isdir(os.path.join(state, "base.tmp"))
-    assert not os.path.isdir(os.path.join(state, "base.bak"))
+    before = sorted(map(tuple, bitmap_state(spark, state).collect()))
+    version = TxTable(state).latest_version()
+
+    seen: list[tuple[int, int]] = []
+    q = run_distinct_ingest(
+        _stream(spark, src),
+        state,
+        checkpoint=str(tmp_path / "ckpt_fresh"),
+        on_batch=lambda bid, n: seen.append((bid, n)),
+    )
+    q.awaitTermination(120)
+    assert seen == []
+    assert TxTable(state).latest_version() == version
+    assert sorted(map(tuple, bitmap_state(spark, state).collect())) == before
     assert _counts(spark, state) == {"1995-03-01": 3}

@@ -179,3 +179,43 @@ def test_distinct_ingest_counts_the_batch_on_its_write(spark, sf_dir, tmp_path, 
     ))
     assert seen == [(0, events.count())]
     assert n_jobs <= 3, n_jobs
+
+
+def test_scd2_sink_counts_the_dimension_on_its_write(spark, tmp_path):
+    """``on_batch``'s dimension row count is observed on the
+    ``overwrite_once`` write: one file, one batch, at most 8 jobs (11
+    with a persist and a separate ``count()`` before the write)."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from etl_spark.streaming.sinks import run_scd2_sink
+
+    in_dir = tmp_path / "scd_in"
+    in_dir.mkdir()
+    pq.write_table(
+        pa.table(
+            {
+                "cust": pa.array([1, 2, 2], pa.int64()),
+                "segment": pa.array(["gold", "silver", "bronze"]),
+                "ts": pa.array(
+                    [dt.datetime(2024, 1, d) for d in (1, 1, 2)], pa.timestamp("us")
+                ),
+            }
+        ),
+        str(in_dir / "part-0.parquet"),
+    )
+    seen = []
+    n_jobs = _jobs_for_one_drain(spark, lambda: run_scd2_sink(
+        spark.readStream.schema("cust LONG, segment STRING, ts TIMESTAMP").parquet(
+            str(in_dir)
+        ),
+        str(tmp_path / "dim"),
+        ["cust"],
+        "ts",
+        checkpoint=str(tmp_path / "ck"),
+        on_batch=lambda bid, n: seen.append((bid, n)),
+    ))
+    assert seen == [(0, 2)]  # latest observation per key
+    assert n_jobs <= 8, n_jobs

@@ -6,6 +6,7 @@ never skipped, and the map itself comes from footers only."""
 from __future__ import annotations
 
 import datetime as dt
+import os
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -111,7 +112,9 @@ def test_null_file_never_wrongly_matches(spark, table_and_map):
 
 def test_zonemap_is_metadata_only_and_small(spark, table_and_map):
     table, zm = table_and_map
-    rows = spark.read.parquet(zm)
+    from etl_spark.sources.txlog import TxTable
+
+    rows = TxTable(zm).read(spark)
     assert rows.count() == (N_FILES + 1) * 4  # one row per (file, col)
     stats = {
         (r["path"].rsplit("/", 1)[-1], r["col"]): r
@@ -212,23 +215,47 @@ def test_unbuilt_column_raises(spark, table_and_map):
         pruned_files(spark, zm, "not_a_col", 0, 1)
 
 
-def test_crash_selfheal_adopts_tmp(spark, tmp_path):
-    import os
-    import shutil
+def _fail_log_claim(*_a, **_k):
+    raise OSError("injected failure at the log claim")
 
+
+def _one_file_map(spark, tmp_path, name):
+    """A table with one 100-row file and its refreshed zone map."""
     from etl_spark.sources.zonemap import zonemap_refresh
 
-    d = tmp_path / "t3"
+    d = tmp_path / name
     d.mkdir()
     pq.write_table(pa.table({"k": pa.array(range(100), pa.int64())}), str(d / "a.parquet"))
-    zm = str(tmp_path / "zm3")
+    zm = str(tmp_path / f"zm_{name}")
     zonemap_refresh(spark, str(d), ["k"], zm)
-    # simulate the crash window: completed tmp, map dir gone
-    shutil.copytree(zm, zm + ".tmp")
-    shutil.rmtree(zm)
-    kept, total = pruned_files(spark, zm, "k", 0, 10)
-    assert total == 1 and len(kept) == 1
-    assert os.path.isdir(zm) and not os.path.isdir(zm + ".tmp")
+    return d, zm
+
+
+def test_crash_selfheal_adopts_tmp(spark, tmp_path, monkeypatch):
+    """A refresh that dies at the log claim, after its data write,
+    leaves the previous map live: readers get the same answer, the
+    unlinked data dir is visible to no reader, and the next refresh
+    commits the change."""
+    from etl_spark.sources.txlog import TxTable
+    from etl_spark.sources.zonemap import zonemap_refresh
+
+    d, zm = _one_file_map(spark, tmp_path, "t3")
+    before = pruned_files(spark, zm, "k", 150, 160)
+    live = TxTable(zm).live_dirs()
+    pq.write_table(
+        pa.table({"k": pa.array(range(100, 200), pa.int64())}), str(d / "b.parquet")
+    )
+    with monkeypatch.context() as m:
+        m.setattr("etl_spark.sources.txlog.os.link", _fail_log_claim)
+        with pytest.raises(OSError, match="injected"):
+            zonemap_refresh(spark, str(d), ["k"], zm)
+    assert len(os.listdir(os.path.join(zm, "data"))) == 2  # the orphan is on disk
+    assert pruned_files(spark, zm, "k", 150, 160) == before
+    assert TxTable(zm).live_dirs() == live
+    assert all("/" + live[0] + "/" in f for f in TxTable(zm).read(spark).inputFiles())
+    assert zonemap_refresh(spark, str(d), ["k"], zm) == (1, 0)
+    kept, total = pruned_files(spark, zm, "k", 150, 160)
+    assert total == 2 and len(kept) == 1 and kept[0].endswith("b.parquet")
 
 
 def test_multi_predicate_conjunction_prunes_more(spark, table_and_map):
@@ -270,58 +297,61 @@ def test_multi_scan_empty_predicates_full_table(spark, table_and_map):
     assert zonemap_scan_multi(spark, table, zm, []).count() == full
 
 
-def test_crash_selfheal_restores_bak(spark, tmp_path):
-    """Crash between the two swap renames with an INCOMPLETE tmp: the
-    previous committed map must come back from .bak; a leftover .bak
-    next to a committed map is garbage-collected."""
-    import os
-    import shutil
-
+def test_crash_selfheal_restores_bak(spark, tmp_path, monkeypatch):
+    """A refresh dropping a removed file that dies at the log claim
+    keeps the previous map (the removed file still mapped, so the scan
+    still keeps it); vacuum reclaims the unlinked data dir, and the
+    next refresh drops the file."""
+    from etl_spark.sources.txlog import TxTable
     from etl_spark.sources.zonemap import zonemap_refresh
 
-    d = tmp_path / "t4"
-    d.mkdir()
+    d, zm = _one_file_map(spark, tmp_path, "t4")
     pq.write_table(
-        pa.table({"k": pa.array(range(100), pa.int64())}), str(d / "a.parquet")
+        pa.table({"k": pa.array(range(100, 200), pa.int64())}), str(d / "b.parquet")
     )
-    zm = str(tmp_path / "zm4")
     zonemap_refresh(spark, str(d), ["k"], zm)
-    # crash window: old map renamed to .bak, tmp incomplete (no
-    # _SUCCESS), map dir absent
-    shutil.copytree(zm, zm + ".tmp")
-    os.remove(os.path.join(zm + ".tmp", "_SUCCESS"))
-    os.rename(zm, zm + ".bak")
+    before = pruned_files(spark, zm, "k", 0, 10)
+    versions = TxTable(zm).latest_version()
+    os.remove(str(d / "a.parquet"))
+    with monkeypatch.context() as m:
+        m.setattr("etl_spark.sources.txlog.os.link", _fail_log_claim)
+        with pytest.raises(OSError, match="injected"):
+            zonemap_refresh(spark, str(d), ["k"], zm)
+    assert pruned_files(spark, zm, "k", 0, 10) == before
+    assert TxTable(zm).latest_version() == versions
+    t = TxTable(zm)
+    orphans = set(os.listdir(os.path.join(zm, "data"))) - {
+        os.path.basename(p) for v in (versions - 1, versions) for p in t.live_dirs(v)
+    }
+    assert len(orphans) == 1
+    assert set(t.vacuum(retain_versions=2, grace_seconds=0)) >= {
+        f"data/{o}" for o in orphans
+    }
+    assert zonemap_refresh(spark, str(d), ["k"], zm) == (0, 1)
     kept, total = pruned_files(spark, zm, "k", 0, 10)
-    assert total == 1 and len(kept) == 1
-    assert os.path.isdir(zm) and not os.path.isdir(zm + ".bak")
-    # committed map + stale .bak: heal drops the .bak
-    shutil.copytree(zm, zm + ".bak")
-    pruned_files(spark, zm, "k", 0, 10)
-    assert not os.path.isdir(zm + ".bak")
+    assert total == 1 and kept == []
 
 
-def test_refresh_swap_never_hides_map(spark, tmp_path):
-    """After a refresh the map dir must exist (the rmtree-first swap
-    left it absent for the whole delete)."""
-    import os
-
+def test_refresh_swap_never_hides_map(spark, tmp_path, monkeypatch):
+    """The map stays readable through a refresh that dies at the log
+    claim and through the one after it, and no refresh leaves a
+    sibling directory next to the map."""
     from etl_spark.sources.zonemap import zonemap_refresh
 
-    d = tmp_path / "t5"
-    d.mkdir()
-    pq.write_table(
-        pa.table({"k": pa.array(range(100), pa.int64())}), str(d / "a.parquet")
-    )
-    zm = str(tmp_path / "zm5")
-    zonemap_refresh(spark, str(d), ["k"], zm)
+    d, zm = _one_file_map(spark, tmp_path, "t5")
     pq.write_table(
         pa.table({"k": pa.array(range(100, 200), pa.int64())}),
         str(d / "b.parquet"),
     )
+    with monkeypatch.context() as m:
+        m.setattr("etl_spark.sources.txlog.os.link", _fail_log_claim)
+        with pytest.raises(OSError, match="injected"):
+            zonemap_refresh(spark, str(d), ["k"], zm)
+    assert pruned_files(spark, zm, "k", 0, 199)[1] == 1
     added, removed = zonemap_refresh(spark, str(d), ["k"], zm)
     assert (added, removed) == (1, 0)
-    assert os.path.isdir(zm)
-    assert not os.path.isdir(zm + ".tmp") and not os.path.isdir(zm + ".bak")
+    assert pruned_files(spark, zm, "k", 0, 199)[1] == 2
+    assert sorted(os.listdir(tmp_path)) == ["t5", "zm_t5"]
 
 
 def test_partitioned_table_keeps_partition_columns(spark, tmp_path):
@@ -456,7 +486,7 @@ def test_txlog_optimize_zorder(spark, tmp_path):
 
     files = t.read(spark).inputFiles()
     fdf = spark.createDataFrame([(f,) for f in files], "path string")
-    _footer_stats(fdf, ["a", "b"]).write.mode("overwrite").parquet(zm)
+    TxTable(zm).overwrite(_footer_stats(fdf, ["a", "b"]))
 
     lo, hi = 2000, 2499
     kept_a, total = pf(spark, zm, "a", lo, hi)
